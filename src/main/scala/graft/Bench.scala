@@ -39,51 +39,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // harmless on current µs fixtures; required for the pre-2026-08-13 ns generation
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Generated-class names WITHOUT the codegen-stage id (round 17):
-      // with the default useIdInClassName=true the per-plan stage counter
-      // is baked into every generated class NAME, so the same subplan
-      // re-planned under a shifted numbering is a janino cache MISS —
-      // measured 117 recompiled classes PER INVOCATION on
-      // ts_changepoint_deep (0 with the id off; the id exists for
-      // debugging readability only). Scale-independent.
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      // Whole-stage-codegen CLASS cache sized for the suite (round 18,
-      // VERDICT r17 task 1): the default spark.sql.codegen.cache.maxEntries
-      // is 100 entries, and this suite compiles ~690 distinct generated
-      // units per run (sum of codegen_n, BENCH_FULL_r18_baseline) — the
-      // cache cycles several times over, so cross-query shape reuse (the
-      // ts_*/tpch_*/stream families share window/agg/join subplans) and
-      // the jit-gate's rep-2 both recompile classes janino already built.
-      // 4096 entries covers the suite's working set with headroom; each
-      // entry is a generated-source string + class (~tens of KB), so the
-      // worst case is tens of MB on an 8 GiB driver. Static conf, set at
-      // session build; scale-independent (driver-side compile CPU only).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // Session-artifact classloader isolation OFF (round 18, VERDICT r17
-      // task 1's stream-family half): the codegen class cache keys on
-      // (classloader, source), and with isolation on every CLONED session
-      // — each streaming-query run clones — carries a fresh classloader,
-      // so identical generated sources recompile on every stream start
-      // (ProbeCodegen: stream_incremental 10 classes/rep, stream_recovery
-      // 20/rep with isolation; 0 with it off, wall 1.34→0.98 /
-      // 1.50→1.19 s). This engine registers no per-session artifacts, so
-      // isolation buys nothing at any scale; the conf is session-creation
-      // static and plan/result-neutral.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      // reliable checkpoints (dedup clusters) delete their files once the
-      // RDD is GC'd — a multi-run session must not accumulate checkpoint
-      // dirs in tmpfs
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Jobs-per-group counter. onJobStart fires on the async listener bus,
     // so per-group counts are read ONCE at the end (after a drain pause),
@@ -188,7 +144,7 @@ object Bench {
       // Text-codec JIT warm-up (round 13, VERDICT r12 task 5): the
       // univocity CSV writer/parser and Jackson JSON generator/parser
       // JIT-compile on first use — measured ~35 process-CPU-s at sf0.1
-      // rep-1 vs ~9 steady-state (ProbeCsv ladder, PLANS.md round 13) —
+      // rep-1 vs ~9 steady-state (PLANS.md round 13) —
       // and that cost landed entirely on ingest_csv, the r12 suite's
       // slowest driver query (7.05 s wall, CPU-invariant ⇒ real work,
       // and that work was compilation, not encode). Synthetic rows only,
@@ -201,11 +157,8 @@ object Bench {
         // collected next to another run) overwrite each other's files
         // mid-read, failing the warm-up and bleeding the JIT cost back
         // into that run's first timed ingest query
-        val codecRoot = java.nio.file.Paths.get(
-          if (new java.io.File("/dev/shm").canWrite) "/dev/shm" else
-            sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-        val codecPath = java.nio.file.Files.createTempDirectory(codecRoot, "graft_codec_warm_")
-        val codecDir = codecPath.toString
+        val codecPath = operators.ScratchDirs.tempDir("graft_codec_warm_")
+        val codecDir = codecPath.getPath
         try {
         val synth = spark.range(20000).select(col("id").as("okey"),
           (col("id") % 7).cast("int").as("line"),
@@ -296,14 +249,9 @@ object Bench {
         }
         } finally {
           // the files served their purpose the moment the JIT ran —
-          // reclaim the tmpfs EVEN when a rep throws (round-14 review:
-          // nothing else sweeps graft_codec_warm_* dirs, so a failing
-          // warm-up on a contended host would otherwise accumulate
-          // tmpfs usage that perturbs later bench datums)
-          def rmAll(f: java.io.File): Unit = {
-            val kids = f.listFiles(); if (kids != null) kids.foreach(rmAll); f.delete(); ()
-          }
-          rmAll(codecPath.toFile)
+          // reclaim the tmpfs EVEN when a rep throws, so the timed
+          // queries never run beside the warm-up's leftovers
+          operators.ScratchDirs.deleteRecursively(codecPath)
         }
       } catch { case e: Throwable =>
         System.err.println(s"BENCH WARMUP (text codecs) FAILED: ${e.getMessage}")
@@ -311,7 +259,7 @@ object Bench {
       // Driver-side linear-algebra warm-up (round 17): breeze eigSym's
       // FIRST call loads/initializes the LAPACK backend and its class
       // graph on the driver — measured ~1.5 s landing inside llm_pca's
-      // timed rep (2.73 s rep1 vs 0.34 s warm, ProbeStages; the JIT gate
+      // timed rep (2.73 s rep1 vs 0.34 s warm; the JIT gate
       // cannot see it because native-library init is not JVM compiler
       // time). Synthetic 8×8 matrix only: warms the PROCESS, computes
       // nothing from any fixture — the codec warm-up contract.
@@ -332,9 +280,8 @@ object Bench {
           // raw read warms the page cache but leaves Tables' schemaCache
           // cold, so each table's footer-inference JOB landed inside the
           // first TIMED query touching it (worst: the first registerAll
-          // consumer paid ~9 inference jobs at once — measured as jobs
-          // 20-28 of a TimeQ trace). byName populates the cache here,
-          // in the untimed region.
+          // consumer paid ~9 inference jobs at once). byName populates
+          // the cache here, in the untimed region.
           val df = Tables.byName(spark, sfDir, t)
           // bit_xor, not sum (round 18): under ANSI mode (Spark 4 default)
           // sum() over 64-bit hashes ARITHMETIC_OVERFLOWs on any

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesized-scale stress fixture generator (VERDICT r10 task 5): the
@@ -15,11 +15,12 @@ import org.apache.spark.sql.functions._
   * plan-shape and shuffle-volume questions STRESS.md asks, wrong for
   * recall-quality questions, which stay on the real fixtures.
   *
-  * Output lands in Tables layout (<out>/<table>.parquet dirs), so EVERY
-  * SparkEntry query and TimeQ run unmodified against it. region/nation
-  * (domain tables) keep one copy. Deterministic: no RNG, no clock.
+  * Output lands in Tables layout (<out>/<table>.parquet dirs), so every
+  * SparkEntry query and every `graft.Tool` subcommand runs unmodified
+  * against it. region/nation (domain tables) keep one copy.
+  * Deterministic: no RNG, no clock.
   *
-  * Usage: runMain graft.StressGen <srcDir> <outDir> <K>
+  * Usage: [SPARK_GRAFT_CPUS=n] runMain graft.StressGen <srcDir> <outDir> <K>
   */
 object StressGen {
   // strides: comfortably above every sf0.1 max key, far below 2^52 so
@@ -28,11 +29,7 @@ object StressGen {
 
   def main(args: Array[String]): Unit = {
     val src = args(0); val out = args(1); val k = args(2).toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def copies(df: DataFrame, shifts: Map[String, Long]): DataFrame =

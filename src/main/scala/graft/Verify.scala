@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,37 +8,7 @@ object Verify {
     // restrict the dump to the named queries for fast iteration.
     val Array(sfDir, outDir) = args.take(2)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // harmless on current µs fixtures; required for the pre-2026-08-13 ns generation
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Generated-class names WITHOUT the codegen-stage id (round 17):
-      // with the default useIdInClassName=true the per-plan stage counter
-      // is baked into every generated class NAME, so the same subplan
-      // re-planned under a shifted numbering is a janino cache MISS —
-      // measured 117 recompiled classes PER INVOCATION on
-      // ts_changepoint_deep (0 with the id off; the id exists for
-      // debugging readability only). Scale-independent.
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      // codegen class cache sized for the suite (round 18 — default 100
-      // entries cycles several times over a 323-query run; see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // Session-artifact classloader isolation OFF (round 18): the codegen
-      // class cache keys on (classloader, source), and with isolation on
-      // every CLONED session — each streaming-query run clones — carries a
-      // fresh classloader, so identical generated sources recompile per
-      // stream start (measured 10-20 classes/rep on the stream family; 0
-      // with this off). This engine registers no per-session artifacts, so
-      // isolation buys nothing here at any scale.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      // GC'd reliable checkpoints delete their tmpfs files (see Bench)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -48,28 +48,6 @@ object SimilarityKernels {
     if (union == 0) 0.0 else inter.toDouble / union
   }
 
-  /** Same merge-intersection over dictionary-encoded token ids (sorted
-    * distinct int arrays): integer compares and ~4× less row data than
-    * string tokens — dictionary-encode-then-compare is the standard trick
-    * for similarity at scale, and with a bijective term→id mapping the
-    * Jaccard value is exactly the string-set Jaccard. */
-  def jaccardSortedInt(a: ArrayData, b: ArrayData): Double = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    var i = 0
-    var j = 0
-    var inter = 0
-    while (i < na && j < nb) {
-      val x = a.getInt(i)
-      val y = b.getInt(j)
-      if (x == y) { inter += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    val union = na + nb - inter
-    if (union == 0) 0.0 else inter.toDouble / union
-  }
-
   /** Merge-intersection over sorted distinct `array<bigint>` — the
     * hash-id encoding (`xxhash64(term)`) used by the dedup operators:
     * ids are computed map-side inside the document row, so there is no
@@ -215,27 +193,6 @@ case class JaccardSim(left: Expression, right: Expression,
     copy(left = newLeft, right = newRight)
 }
 
-/** Jaccard over sorted distinct dictionary-encoded token ids
-  * (`array<int>`) — see SimilarityKernels.jaccardSortedInt. */
-case class JaccardIntSim(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  import org.apache.spark.sql.types.IntegerType
-  override def inputTypes = Seq(ArrayType(IntegerType), ArrayType(IntegerType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "jaccard_int_sim"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SimilarityKernels.jaccardSortedInt(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.SimilarityKernels.jaccardSortedInt($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaccardIntSim =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Jaccard over sorted distinct hash-encoded token ids (`array<bigint>`,
   * from `xxhash64(term)`) — see SimilarityKernels.jaccardSortedLong. */
 case class JaccardLongSim(left: Expression, right: Expression)
@@ -306,16 +263,6 @@ object sim {
     * general. */
   def jaccardSim(a: Column, b: Column): Column =
     column(JaccardSim(expression(a), expression(b), assumeDistinct = true))
-
-  /** For inputs that are additionally sort_array'ed (pre-sorted once per
-    * row): zero-allocation merge-intersection kernel. */
-  def jaccardSortedSim(a: Column, b: Column): Column =
-    column(JaccardSim(expression(a), expression(b),
-      assumeDistinct = true, assumeSorted = true))
-
-  /** For sorted distinct dictionary-encoded id arrays (`array<int>`). */
-  def jaccardIntSim(a: Column, b: Column): Column =
-    column(JaccardIntSim(expression(a), expression(b)))
 
   /** For sorted distinct hash-encoded id arrays (`array<bigint>`). */
   def jaccardLongSim(a: Column, b: Column): Column =

@@ -83,11 +83,6 @@ object Aggregates {
       .agg(approx_count_distinct(col("user_id"), 0.05).as("approx_users"))
       .orderBy("event_type")
 
-  private def ordersWithNation(spark: SparkSession, dir: String): DataFrame =
-    Tables.orders(spark, dir)
-      .join(broadcast(Tables.customer(spark, dir)), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
-
   /** GROUPING SETS ((nation),(priority),()) with coalesce'd 'ALL' markers —
     * the validated formulation that sidesteps NULL-ordering divergence
     * (SURVEY §2.D agg_rollup note). SQL-form: identical text runs on both

@@ -430,7 +430,7 @@ object Analytics {
     * NtileFormulaSpec-pinned — agg_pareto ships it live). Round 10
     * measured the lazy-frame swap at 5× the window form; round 11
     * re-measured it in the TWO-WRITE shape (customer frame materialized
-    * AQE-off, rank chains off the file — ProbeRfmScale) at BOTH fixture
+    * AQE-off, rank chains off the file) at BOTH fixture
     * scale and the StressGen 10× frame, row-equality verified at both:
     * window 0.7 → 1.4 s vs two-level 4.3 → 6.4 s from 10k → 100k
     * customers (STRESS.md). FLIP TRIGGER: the window form's single-task

@@ -347,7 +347,7 @@ object Analytics2 {
     * Scale: two pushed-filter scans each collapsing to a customer-grain
     * hash agg, two vocabulary-sized ntile windows, one custkey-keyed
     * join — nothing at fact grain after the first agg. Round-11 stress
-    * datum (ProbeRfmScale on the StressGen 10× frame, row-equality
+    * datum (the StressGen 10× frame, row-equality
     * verified): window form 0.58 → 1.2 s vs two-write two-level form
     * 4.3 → 5.3 s from 10k → 100k customers — same flip trigger as
     * rfmSegments (~10M-customer grain; see its scaladoc + STRESS.md). */

@@ -314,7 +314,7 @@ object Clustering {
     * every node appears as a src, so countDistinct(src) IS the node
     * count (matches the oracle's nodes CTE). */
   private[operators] def graphEdges(spark: SparkSession, dir: String): DataFrame = {
-    // Round-11 (VERDICT r10 task 3, A/B measured in ProbeGraphBucket): the
+    // Round-11 (VERDICT r10 task 3, measured A/B): the
     // artifact is a BUCKETED table — bucketBy(32, src) with an aligned
     // repartition so each task owns exactly one bucket (32 files, no
     // small-file fan-out) — instead of the r10 plain parquet. Plain
@@ -693,7 +693,7 @@ object Clustering {
     // sorted supplier arrays instead of the pk self-equi-join. The join
     // form shuffled the pair set twice (both join sides), materialized
     // Σ_p deg(p)² probe matches (~8.7 M rows at sf0.1, 78 MB of partial-
-    // agg shuffle — ProbeStages round-17 trace), and threw half away on
+    // agg shuffle, measured per stage), and threw half away on
     // s1 < s2; the array form shuffles the pair set ONCE into
     // (pk → sorted sk array) and emits each unordered pair exactly once
     // (i < j positions ⇒ s1 < s2 for free), Σ_p deg(p)·(deg(p)−1)/2 rows
@@ -709,7 +709,7 @@ object Clustering {
     // coalescing sizes the post-shuffle stage by the exchange's ~4 MB of
     // array bytes, but the clique expansion multiplies work ×deg²/2
     // AFTER the exchange — measured 4 coalesced tasks serializing a
-    // 4.5 CPU-s expansion (ProbeStages round 17). Expansion volume is
+    // 4.5 CPU-s expansion. Expansion volume is
     // problem knowledge the runtime cannot see (guide §8).
     val nParts = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val byPart = sp.repartition(nParts, col("pk"))
@@ -799,7 +799,7 @@ object Clustering {
     // structurally bounded at (cap−1)/2 ≈ 12 output rows per input pair,
     // so scaleParts(pairs, 12) prices the post-exchange volume — a few
     // tasks at fixture scale (a flat session-conf pin measured +0.4-0.6 s
-    // of pure 32-task launch overhead there, ProbeJacAb r18), saturating
+    // of pure 32-task launch overhead there), saturating
     // to the session's configured parallelism at 10×/100× where the
     // collapse hazard lives.
     val nParts = {
@@ -856,7 +856,7 @@ object Clustering {
     // 18, guide §3 — the graphPagerank superstep idiom): at 100×/16 g the
     // node frames outgrow the broadcast threshold and the joins fell to
     // sort-merge, whose EDGE-side sorts were this query's whole 2.4–3.5 GB
-    // spill (TimeQ r18 trace); a shuffled-hash join builds the node-grain
+    // spill; a shuffled-hash join builds the node-grain
     // side per partition — bounded at any scale — and never sorts the edge
     // stream (100× warm 11–21 s/2.4–3.5 GB → 10.6–11.1 s/ZERO spill). At
     // fixture scale the node frames broadcast and an unconditional hint

@@ -37,68 +37,23 @@ import graft.Tables
   */
 object JdbcSink {
 
-  private def rm(f: java.io.File): Unit = {
-    val kids = f.listFiles(); if (kids != null) kids.foreach(rm); f.delete(): Unit
-  }
-
-  /** Remove sibling `derby_*` dirs that no live JVM owns (ADVICE r6): a
-    * crashed/killed run never executes its shutdown hook, so its UUID dir
-    * would leak tmpfs forever. Stale = older than the age cutoff AND its
-    * `dbex.lck` is not exclusively locked — Derby holds a FileLock on
-    * that file for the whole boot exactly so dual-booters can detect a
-    * live owner; `tryLock` succeeding proves there is none. The age gate
-    * keeps the sweep away from a sibling mid-boot (lock file created a
-    * moment after the dir).
-    *
-    * Caveat (ADVICE r7): Derby's dbex.lck lock is BEST-EFFORT — on
-    * filesystems where java.nio FileLock is unsupported or advisory-broken
-    * (NFS, some container mounts) Derby runs without holding it, and the
-    * probe would "prove" a live sibling dead. Two mitigations: the roots
-    * used here are tmpfs//tmp (local filesystems where FileLock works),
-    * and every boot refreshes its own dir's mtime below, so a LIVE
-    * long-running sibling also stays behind the age gate. */
-  private[graft] def sweepStale(root: java.io.File, cutoffMs: Long): Unit = {
-    val olds = root.listFiles()
-    if (olds == null) return
-    olds.filter(f => f.isDirectory && f.getName.startsWith("derby_") &&
-        f.lastModified < cutoffMs).foreach { d =>
-      val lck = new java.io.File(d, "dbex.lck")
-      val free =
-        if (!lck.exists) true
-        else try {
-          val ch = java.nio.channels.FileChannel.open(lck.toPath,
-            java.nio.file.StandardOpenOption.WRITE)
-          try {
-            val l = ch.tryLock()
-            if (l != null) { l.release(); true } else false
-          } finally ch.close()
-        } catch { case _: Throwable => false } // can't prove it's dead -> keep
-      if (free) rm(d)
-    }
-  }
-
-  /** One embedded-Derby path per JVM: concurrent JVMs (sbt test vs
-    * Verify) must not fight over Derby's single-JVM boot lock, while
-    * repeated calls in one session reuse the database via overwrite. */
+  /** One embedded-Derby database per JVM, in the shared io root:
+    * concurrent JVMs (sbt test vs Verify) must not fight over Derby's
+    * single-JVM boot lock, while repeated calls in one session reuse the
+    * database via overwrite. A crashed JVM's database is reaped by
+    * ScratchDirs' rule once its `dbex.lck` is free and the dir is stale. */
   private lazy val dbPath: String = {
-    val root = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_io" else "/tmp/graft_io"
+    val root = ScratchDirs.ioRoot
     // derby.log lands in derby.system.home instead of the repo cwd
-    new java.io.File(root).mkdirs()
     if (System.getProperty("derby.system.home") == null)
-      System.setProperty("derby.system.home", root)
-    // reap what crashed predecessors left behind (1 h age + lock probe)
-    try sweepStale(new java.io.File(root), System.currentTimeMillis() - 3600L * 1000)
-    catch { case _: Throwable => () }
+      System.setProperty("derby.system.home", root.getPath)
     val p = s"$root/derby_${java.util.UUID.randomUUID().toString.take(8)}"
-    // tmpfs hygiene: this JVM's database dir must not outlive it (the
-    // per-JVM UUID prevents boot-lock fights between concurrent JVMs, so
-    // LIVE siblings are protected by sweepStale's lock probe and only
-    // provably-dead dirs are reaped). Shut Derby down first so the store
-    // is quiescent.
+    // this JVM's database dir must not outlive it; shut Derby down first
+    // so the store is quiescent
     sys.addShutdownHook {
       try java.sql.DriverManager.getConnection(s"jdbc:derby:$p;shutdown=true")
       catch { case _: java.sql.SQLException => () } // XJ015/08006 = clean shutdown
-      rm(new java.io.File(p))
+      ScratchDirs.deleteRecursively(new java.io.File(p))
     }
     p
   }
@@ -106,11 +61,10 @@ object JdbcSink {
   /** This JVM's embedded-Derby connection URL, shared with the streaming
     * warehouse sink (`stream_jdbc_sink` — round 16): one database per
     * JVM, separate tables per operator. Refreshes the database dir's
-    * mtime on every use so the age gate alone protects a long-lived JVM
-    * even where FileLock is a no-op (sweepStale's caveat); no-op before
-    * Derby first creates the dir. */
+    * liveness beacon on every use (a no-op before Derby first creates
+    * the dir). */
   private[graft] def jdbcUrl: String = {
-    new java.io.File(dbPath).setLastModified(System.currentTimeMillis()): Unit
+    ScratchDirs.touch(new java.io.File(dbPath))
     s"jdbc:derby:$dbPath;create=true"
   }
 

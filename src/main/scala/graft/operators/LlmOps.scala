@@ -112,87 +112,27 @@ object LlmOps {
     * doc appears K times VERBATIM, band buckets grow K-fold and
     * within-bucket pair generation is quadratic in K — the 10× stress
     * frame (K=10) ran ×34, not ×10. That is the exact-duplicate hub
-    * problem of banded LSH — and the round-11 session-2 A/B (ProbeHub)
-    * sharpened the diagnosis: the growth is OUTPUT-bound, not
-    * candidate-bound. The declared result enumerates every qualifying
+    * problem of banded LSH, and the growth is OUTPUT-bound, not
+    * candidate-bound: the declared result enumerates every qualifying
     * pair, and on the 10× frame that is 284M rows (×100 — every
     * duplicate class of K docs contributes K² expansions of each
     * qualifying pair), so wall-clock ×34 is SUB-linear per output row.
-    * A representative-collapse variant (band join on one rep per
-    * identical-toks class, members expanded back in-row —
-    * llmMinhashCollapsed below) makes candidate generation linear in
-    * DISTINCT docs at any duplication factor, emits the bit-identical
-    * pair set (HubCollapseSpec pins exceptAll both ways on a 3×
-    * verbatim-duplicated corpus), and was MEASURED SLOWER at both
-    * scales: 1.2-1.4 s vs 0.7 s at sf0.1, 32 s vs 28 s at 10× — both
-    * forms are row-materialization-bound on the expanded output, and
-    * the collapse only adds the class-table build. The claim was then
-    * falsification-tested at K=100 duplication (STRESS.md): parity,
-    * 24-30 s vs 25.5 s on an identical 291M-pair output — the direct
-    * band join's in-bucket quadratic never overtakes row generation at
-    * any measured duplication depth. Direct stays
-    * shipped; the production answer to duplication remains ordering
-    * (exact dedup FIRST — llm_dedup_funnel's pipeline — collapses each
-    * class to one representative and shrinks the OUTPUT itself).
-    * Contrast llmEmbNeardup, where the per-candidate kernel is a
-    * 64-dim cosine and the same collapse WINS 3.4× at 10×. */
-  def llmMinhash(spark: SparkSession, dir: String): DataFrame =
-    minhashPairsOf(minhashTokenIds(spark, dir))
-      .orderBy(col("a_id").asc, col("b_id").asc)
-
-  /** The representative-collapse variant — measured and NOT adopted
-    * (scaladoc above); kept under HubCollapseSpec's pair-set-equality
-    * pin as the ready swap for corpora whose duplication factor makes
-    * the class table much smaller than the corpus AND whose consumers
-    * cap the expansion (e.g. a funnel that drops within-class pairs). */
-  private[graft] def llmMinhashCollapsed(spark: SparkSession, dir: String): DataFrame = {
-    // pre-materialized (one AQE-off write): the class table feeds BOTH
-    // sides of the band self-join plus the within-class branch, and a
-    // broadcast side cannot reuse the streamed side's exchange — without
-    // the write, the corpus scan + array-keyed ObjectHashAggregate
-    // executed three times per action (measured 3.9→1.4 s at sf0.1)
-    val classes = MemoFrames.materialize(spark, "minhash_classes",
-      minhashTokenIds(spark, dir).groupBy("toks")
-        .agg(min("doc_id").as("rep"),
-          sort_array(collect_list(col("doc_id"))).as("members")))
-    // the class file is tiny → ONE scan partition → the band join and the
-    // member expansion (output-grain row generation!) would run in one
-    // task; spread it across the cores like minhashTokenIds does
-    val reps = classes.repartition(spark.sparkContext.defaultParallelism)
-      .select(col("rep").as("doc_id"), col("toks"), col("members"))
+    * A representative-collapse form (band join on one rep per
+    * identical-toks class, members expanded back in-row) emits the same
+    * pair set but measured slower — 1.2-1.4 s vs 0.7 s at sf0.1, 32 s vs
+    * 28 s at 10×, parity at K=100 (STRESS.md) — because both forms are
+    * bound by materializing the expanded output. The production answer
+    * to duplication is ordering (exact dedup FIRST — llm_dedup_funnel's
+    * pipeline — collapses each class to one representative and shrinks
+    * the OUTPUT itself). Contrast llmEmbNeardup, where the per-candidate
+    * kernel is a 64-dim cosine and the same collapse WINS 3.4× at 10×. */
+  def llmMinhash(spark: SparkSession, dir: String): DataFrame = {
     val jac = graft.functions.sim.jaccardLongSim(col("x.toks"), col("y.toks"))
-    // member lists ride THROUGH the band pipeline and expand by explode in
-    // the candidate projection — the first cut of this variant re-joined
-    // the pair stream against a (rep, member) table instead and lost
-    // another 2× (two extra pair-grain joins on the 284M-row output);
-    // in-row expansion adds zero shuffles at any grain
-    val cross = minhashCandidates(minhashBandsOf(reps, Seq("members")))
-      .select(col("x.members").as("ma"), col("y.members").as("mb"),
-        round(jac, 6).as("jac"))
-      .filter(col("jac") >= 0.8) // LSH verify step, at class grain
-      .select(explode(crossClassPairs(col("ma"), col("mb"))).as("p"), col("jac"))
-      .select(col("p.a").as("a_id"), col("p.b").as("b_id"), col("jac"))
-    // within-class pairs: Jaccard exactly 1.0 (the merge kernel walks
-    // identical non-empty arrays in lockstep: inter = union); EMPTY
-    // arrays, whose NULL band hashes never equi-join in the direct form,
-    // are excluded by the size(toks) > 0 guard
-    val within = classes
-      .filter(size(col("members")) > 1 && size(col("toks")) > 0)
-      .select(explode(dupClassPairs(col("members"))).as("p"))
-      .select(col("p.a").as("a_id"), col("p.b").as("b_id"), lit(1.0).as("jac"))
-    cross.unionByName(within).orderBy(col("a_id").asc, col("b_id").asc)
-  }
-
-  /** Stages 1–3 (bands → bucket self-join → Jaccard ≥ 0.8 verify) over an
-    * arbitrary (doc_id, toks) frame at document grain — the SHIPPED
-    * llmMinhash pipeline (the reverted collapsed variant inlines the
-    * same stages with the member-list passthrough instead). */
-  private[graft] def minhashPairsOf(docs: DataFrame): DataFrame = {
-    val jac = graft.functions.sim.jaccardLongSim(col("x.toks"), col("y.toks"))
-    minhashCandidates(minhashBandsOf(docs))
+    minhashCandidates(minhashBandsOf(minhashTokenIds(spark, dir)))
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"),
         round(jac, 6).as("jac"))
       .filter(col("jac") >= 0.8) // LSH verify step
+      .orderBy(col("a_id").asc, col("b_id").asc)
   }
 
   /** All C(M,2) ordered pairs of a SORTED duplicate-class member array,
@@ -207,14 +147,6 @@ object LlmOps {
       transform(slice(members, i + lit(2), size(members)),
         b => struct(a.as("a"), b.as("b")))))
 
-  /** The ma × mb id-pair cartesian of a qualifying class pair, built
-    * in-row by nested HOFs so the expansion is ONE Generate (two chained
-    * explodes re-copied the second member array once per first-side
-    * member and re-buffered the intermediate rows). */
-  private[graft] def crossClassPairs(ma: Column, mb: Column): Column =
-    flatten(transform(ma, a => transform(mb, b =>
-      struct(least(a, b).as("a"), greatest(a, b).as("b")))))
-
   /** llmMinhash stage 0 — hash-encoded token-id table. Tokens become
     * sorted long ids ENTIRELY map-side: `xxhash64(token)` inside the
     * document row. The verify stage then moves/compares compact
@@ -224,8 +156,7 @@ object LlmOps {
     * window ("No Partition Defined for Window…" — the whole vocabulary
     * through ONE task). Collision odds are ~n²/2⁶⁵ (≈10⁻⁷ even at 10⁹
     * distinct tokens), so Jaccard values are unchanged for any realistic
-    * corpus. Shared with the dev profiler (graft.ProbeMinhash) so the
-    * probe's stage expressions can never drift from the operator's. */
+    * corpus. */
   private[graft] def minhashTokenIds(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism) // single-row-group file
@@ -242,31 +173,24 @@ object LlmOps {
     * moving one side's arrays with every pair; profiled, those two joins
     * were the whole tail of the query. Earlier bands' hashes (bh0..bh2)
     * ride along for the emit-once predicate below. */
-  private[graft] def minhashBands(spark: SparkSession, dir: String): DataFrame =
-    minhashBandsOf(minhashTokenIds(spark, dir))
-
-  /** `extras` = additional columns of `base` carried through the band
-    * table untouched (the reverted collapsed variant rides the
-    * duplicate-class member list through here). */
-  private[graft] def minhashBandsOf(base: DataFrame, extras: Seq[String] = Nil): DataFrame = {
-    val ex = extras.map(col)
+  private[graft] def minhashBandsOf(base: DataFrame): DataFrame = {
     val sigs = (0 until 16).map { i =>
       array_min(transform(col("toks"), t => xxhash64(t + lit(i * 1000003)))).as(s"h$i")
     }
-    val sig = base.select(Seq(col("doc_id"), col("toks")) ++ ex ++ sigs: _*)
+    val sig = base.select(Seq(col("doc_id"), col("toks")) ++ sigs: _*)
     val bhs = (0 until 4).map { b =>
       xxhash64(col(s"h${4 * b}"), col(s"h${4 * b + 1}"),
         col(s"h${4 * b + 2}"), col(s"h${4 * b + 3}")).as(s"bh$b")
     }
-    val sigB = sig.select(Seq(col("doc_id"), col("toks")) ++ ex ++ bhs: _*)
+    val sigB = sig.select(Seq(col("doc_id"), col("toks")) ++ bhs: _*)
     val bandCols = (0 until 4).map(b => struct(lit(b).as("band"), col(s"bh$b").as("bh")))
     sigB
-      .select(Seq(col("doc_id"), col("toks"), size(col("toks")).as("n"),
-        col("bh0"), col("bh1"), col("bh2")) ++ ex :+
-        explode(array(bandCols: _*)).as("bnd"): _*)
-      .select(Seq(col("doc_id"), col("toks"), col("n"),
+      .select(col("doc_id"), col("toks"), size(col("toks")).as("n"),
+        col("bh0"), col("bh1"), col("bh2"),
+        explode(array(bandCols: _*)).as("bnd"))
+      .select(col("doc_id"), col("toks"), col("n"),
         col("bnd.band").as("band"), col("bnd.bh").as("bh"),
-        col("bh0"), col("bh1"), col("bh2")) ++ ex: _*)
+        col("bh0"), col("bh1"), col("bh2"))
   }
 
   /** The DF-CAP variant (round 12, VERDICT r11 task 4 — STRESS.md's
@@ -293,7 +217,7 @@ object LlmOps {
     * 5-21× (10× duplication) / 3.3× (K=100) STRESS.md datums as the
     * bound. llm_minhash keeps the full-listing contract; this entry
     * puts the production-recommended capped path under the driver's
-    * per-round regression check. ProbeHub measures both. */
+    * per-round regression check. */
   private[graft] def llmMinhashCapped(spark: SparkSession, dir: String,
       cap: Int = 64): DataFrame = {
     val bands = minhashBandsOf(minhashTokenIds(spark, dir))

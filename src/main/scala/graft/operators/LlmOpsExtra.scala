@@ -281,54 +281,15 @@ object LlmOpsExtra {
     * Jaccard. This is the O(n) signature + banded-join dedup pattern that
     * complements MinHash at 100 TB. Shares llm_minhash's measured
     * exact-duplicate hub mode (STRESS.md round 11: verbatim copies make
-    * band buckets quadratic) and the same MEASURED VERDICT (ProbeHub,
-    * round-11 session 2): the 10× growth is output-bound (10.1M declared
-    * pair rows), the direct form runs it in 2.2-2.9 s at 32 threads, and
-    * the representative-collapse variant (llmSimhashCollapsed below,
-    * pair set pinned identical by HubCollapseSpec) was ~0.6 s slower at
-    * sf0.1 and at best par at 10× — direct stays shipped, dedup-first
+    * band buckets quadratic) and the same verdict: the 10× growth is
+    * output-bound (10.1M declared pair rows, 2.2-2.9 s at 32 threads), a
+    * representative-collapse form emitting the same pairs measured
+    * ~0.6 s slower at sf0.1 and at best par at 10×, and dedup-first
     * ordering remains the production answer to duplication. */
   def llmSimhash(spark: SparkSession, dir: String): DataFrame =
-    simhashPairsOf(simhashSignatures(spark, dir))
+    simhashCandidates(simhashSignatures(spark, dir))
+      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"), col("hamming"))
       .orderBy(col("a_id").asc, col("b_id").asc)
-
-  /** The representative-collapse variant (class key = the 64-bit
-    * signature; within-class Hamming 0 for every non-null-signature
-    * class — NULL texts hash to a NULL signature and are excluded, the
-    * same null-band semantics as minhash) — measured and NOT adopted
-    * (scaladoc above); kept under HubCollapseSpec's pair-set-equality
-    * pin. */
-  private[graft] def llmSimhashCollapsed(spark: SparkSession, dir: String): DataFrame = {
-    // pre-materialized for the same three-consumer reason as llmMinhash's
-    // class table (stream side + broadcast side + within-class branch)
-    val classes = MemoFrames.materialize(spark, "simhash_classes",
-      simhashSignatures(spark, dir).groupBy("simhash")
-        .agg(min("doc_id").as("rep"),
-          sort_array(collect_list(col("doc_id"))).as("members")))
-    // tiny class file → spread the band join + member expansion across
-    // the cores (see llmMinhashCollapsed)
-    val reps = classes.repartition(spark.sparkContext.defaultParallelism)
-      .select(col("rep").as("doc_id"), col("simhash"), col("members"))
-    // member lists ride through the band table and expand in-row in the
-    // candidate projection — no pair-grain joins (see llmMinhashCollapsed)
-    val cross = simhashCandidates(reps, Seq("members"))
-      .select(col("x.members").as("ma"), col("y.members").as("mb"), col("hamming"))
-      .select(explode(LlmOps.crossClassPairs(col("ma"), col("mb"))).as("p"), col("hamming"))
-      .select(col("p.a").as("a_id"), col("p.b").as("b_id"), col("hamming"))
-    val within = classes
-      // the isNotNull guard mirrors the direct form's behavior on NULL
-      // texts: a null token array yields a NULL signature, whose band
-      // hashes never equi-join — so the null-signature class must not
-      // emit within-class pairs either (caught by the crafted-corpus
-      // pin in HubCollapseSpec; simhash64 is total only on non-null
-      // arrays)
-      .filter(size(col("members")) > 1 && col("simhash").isNotNull)
-      // XOR with itself: Hamming 0 in exactly bit_count's result type
-      .select(explode(LlmOps.dupClassPairs(col("members"))).as("p"),
-        bit_count(col("simhash").bitwiseXOR(col("simhash"))).as("hamming"))
-      .select(col("p.a").as("a_id"), col("p.b").as("b_id"), col("hamming"))
-    cross.unionByName(within).orderBy(col("a_id").asc, col("b_id").asc)
-  }
 
   /** Per-doc 64-bit signature, computed INSIDE the document row by the
     * codegen'd simhash64 kernel (one pass over the token-hash array).
@@ -341,13 +302,10 @@ object LlmOpsExtra {
       .select(col("doc_id"), graft.functions.sim.simhash64(
         transform(array_distinct(split(col("text"), " ")), t => xxhash64(t))).as("simhash"))
 
-  /** Band bucketing + self-join + Hamming ≤ 3 over an arbitrary
-    * (doc_id, simhash) frame; returns the x/y-aliased candidate frame
-    * with the `hamming` column. `extras` = additional columns carried
-    * through the band table (the reverted collapsed variant rides the
-    * duplicate-class member list through here). */
-  private[graft] def simhashCandidates(sig: DataFrame, extras: Seq[String] = Nil): DataFrame = {
-    val ex = extras.map(col)
+  /** Band bucketing + self-join + Hamming ≤ 3 over a (doc_id, simhash)
+    * frame; returns the x/y-aliased candidate frame
+    * with the `hamming` column. */
+  private[graft] def simhashCandidates(sig: DataFrame): DataFrame = {
     val bandCols = (0 until 4).map { j =>
       struct(lit(j).as("band"),
         shiftrightunsigned(col("simhash"), j * 16).bitwiseAND(0xFFFFL).as("bh"))
@@ -355,10 +313,9 @@ object LlmOpsExtra {
     // each pair emitted once, at its first shared band (bh_j recomputable
     // from the carried simhash) — avoids the pair-level distinct shuffle
     val bands = sig
-      .select(Seq(col("doc_id"), col("simhash")) ++ ex :+
-        explode(array(bandCols: _*)).as("bnd"): _*)
-      .select(Seq(col("doc_id"), col("simhash"),
-        col("bnd.band").as("band"), col("bnd.bh").as("bh")) ++ ex: _*)
+      .select(col("doc_id"), col("simhash"), explode(array(bandCols: _*)).as("bnd"))
+      .select(col("doc_id"), col("simhash"),
+        col("bnd.band").as("band"), col("bnd.bh").as("bh"))
     def bandOf(side: String, j: Int) =
       shiftrightunsigned(col(s"$side.simhash"), j * 16).bitwiseAND(0xFFFFL)
     val firstSharedBand = (0 until 4).map { j =>
@@ -375,17 +332,6 @@ object LlmOpsExtra {
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))))
       .filter(col("hamming") <= 3)
   }
-
-  /** The direct form's stages at document grain. */
-  private[graft] def simhashPairsOf(sig: DataFrame): DataFrame =
-    simhashCandidates(sig)
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"), col("hamming"))
-
-  /** The pre-collapse quadratic form — kept for HubCollapseSpec's
-    * pair-set-equality pin; NOT registered as a query. */
-  private[graft] def llmSimhashDirect(spark: SparkSession, dir: String): DataFrame =
-    simhashPairsOf(simhashSignatures(spark, dir))
-      .orderBy(col("a_id").asc, col("b_id").asc)
 
   private def embDouble(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
@@ -430,7 +376,7 @@ object LlmOpsExtra {
     * whose 10× cost is output-row materialization, making their collapse
     * a wash (see llmMinhash) — this operator's candidate stage evaluates
     * a 64-dim cosine per label-blocked pair, so shrinking the candidate
-    * set is real work saved: ProbeHub measured 3.1→0.9 s warm on the 10×
+    * set is real work saved: measured 3.1→0.9 s warm on the 10×
     * verbatim-duplicated frame, parity (~0.5 s) at sf0.1, and the win
     * grows with duplication exactly as a kernel-bound candidate stage
     * predicts — 21× (24.5→1.2 s) on the K=100 frame (STRESS.md).
@@ -446,8 +392,7 @@ object LlmOpsExtra {
     * HubCollapseSpec against llmEmbNeardupDirect (exceptAll both
     * ways). */
   def llmEmbNeardup(spark: SparkSession, dir: String): DataFrame = {
-    // NOT pre-materialized (unlike llmMinhashCollapsed's class table):
-    // the A/B showed the extra write job costs more than the class agg's
+    // NOT pre-materialized: the A/B showed the extra write job costs more than the class agg's
     // three in-plan executions at this table's size — 6 jobs / ~2 s vs
     // 5 jobs / ~1.2 s warm at sf0.1
     val classes = embDouble(spark, dir).groupBy("label", "e")

@@ -23,8 +23,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Lifecycle (three layers, all idempotent):
   *  - session GC → Cleaner deletes the session's memo dir;
   *  - normal JVM exit → shutdown hook deletes this JVM's base dir;
-  *  - crashed JVMs → an age-gated sweep (2 h, mtime) of sibling base dirs
-  *    runs once per JVM at first use — the JdbcSink reaper pattern.
+  *  - crashed JVMs → ScratchDirs' reap rule (stale AND dead owner pid)
+  *    runs once per JVM at first use.
   *
   * Keys embed the fixture dir; entries assume the data under that dir is
   * immutable for the session's lifetime (true for the driver's testdata).
@@ -43,78 +43,21 @@ object MemoFrames {
 
   private val cleaner = java.lang.ref.Cleaner.create()
 
-  private lazy val jvmBase: java.nio.file.Path = {
-    val shm = new java.io.File("/dev/shm")
-    val root = new java.io.File(
-      if (shm.isDirectory && shm.canWrite) shm
-      else new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp")),
-      "graft-memo").toPath
-    java.nio.file.Files.createDirectories(root)
-    sweepStale(root)
-    // pid in the dir name so the sweep below can check owner LIVENESS,
-    // not just mtime (same fix as SourcesSinks.scratchRoot, ADVICE r14);
-    // createTempDirectory still appends a random suffix so two sessions
-    // of one pid across a fast restart can never collide
-    val mine = java.nio.file.Files.createTempDirectory(
-      root, s"jvm_${ProcessHandle.current().pid()}_")
-    sys.addShutdownHook(deleteRecursively(mine.toString))
-    mine
-  }
-
   /** This JVM's memo base — the one sanctioned way for a TEST to locate
-    * memoized artifacts on disk (never rebuild `/dev/shm/graft-memo/...`
-    * by hand: ScratchPathHygieneSpec enforces this, VERDICT r14 task 2). */
-  private[graft] def jvmBaseDir: java.io.File = jvmBase.toFile
-
-  /** Reap sibling JVM dirs whose mtime is > 2 h old AND whose owning pid
-    * (when the name encodes one) is no longer alive: live JVMs refresh
-    * their own dir's mtime only on memo calls, so a >2 h computation gap
-    * must not cost a LIVE sibling its artifacts (ADVICE r14 — the
-    * SourcesSinks sweep had the same hazard). The pid parse requires the
-    * r15 three-segment shape `jvm_<pid>_<suffix>` (ADVICE r15): a pre-r15
-    * `jvm_<randomLong>` dir (createTempDirectory's all-digit suffix) would
-    * otherwise parse its RANDOM segment as a pid, and ProcessHandle.of
-    * could coincidentally match a live unrelated process, retaining a
-    * genuinely stale dir indefinitely — two-segment names now fall to the
-    * pure age gate. Best-effort. */
-  private def sweepStale(root: java.nio.file.Path): Unit =
-    try {
-      val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
-      val kids = root.toFile.listFiles()
-      if (kids != null) kids.foreach { f =>
-        val ownerAlive = f.getName.split("_") match {
-          case Array("jvm", pid, _, _*) if pid.forall(_.isDigit) && pid.nonEmpty =>
-            try ProcessHandle.of(pid.toLong).map[Boolean](_.isAlive).orElse(false)
-            catch { case _: NumberFormatException => false }
-          case _ => false
-        }
-        if (f.isDirectory && !ownerAlive && f.lastModified() < cutoff)
-          deleteRecursively(f.getAbsolutePath)
-      }
-    } catch { case _: Throwable => () }
-
-  private def deleteRecursively(path: String): Unit =
-    try {
-      val f = new java.io.File(path)
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(k => deleteRecursively(k.getAbsolutePath))
-      f.delete(); ()
-    } catch { case _: Throwable => () }
+    * memoized artifacts on disk (never rebuild the memo root by hand:
+    * ScratchPathHygieneSpec enforces this, VERDICT r14 task 2). */
+  private[graft] def jvmBaseDir: java.io.File = ScratchDirs.memoDir
 
   /** Holds only the path string — a Cleaner action must not reference the
     * session it is registered on, or it would never run. */
   private final class DeleteDir(path: String) extends Runnable {
-    def run(): Unit = deleteRecursively(path)
+    def run(): Unit = ScratchDirs.deleteRecursively(new java.io.File(path))
   }
 
   private def entriesFor(spark: SparkSession): scala.collection.mutable.Map[String, String] = {
-    // Liveness beacon (same fix as the JdbcSink Derby sweep): refresh our
-    // own base dir's mtime on every use, so a long-lived but active JVM
-    // can never cross a sibling's 2 h staleness cutoff and have its memo
-    // files reaped from under live path entries.
-    jvmBase.toFile.setLastModified(System.currentTimeMillis())
+    ScratchDirs.touch(ScratchDirs.memoDir)
     cache.computeIfAbsent(spark, { s =>
-      val dir = java.nio.file.Files.createTempDirectory(jvmBase, "session_")
+      val dir = java.nio.file.Files.createTempDirectory(ScratchDirs.memoDir.toPath, "session_")
       cleaner.register(s, new DeleteDir(dir.toString))
       scala.collection.mutable.Map("" -> dir.toString)
     })
@@ -172,7 +115,7 @@ object MemoFrames {
   /** session → (tag → live mat_* path). A long-lived session repeatedly
     * invoking a per-call-materializing query (weighted median, pareto,
     * eqdepth, basket rules, pagerank/label-prop tops) must not grow
-    * /dev/shm without bound (ADVICE r10): when a new call writes the same
+    * tmpfs without bound (ADVICE r10): when a new call writes the same
     * tag, the PREVIOUS call's file is deleted here. Safe because queries
     * consume their materialized frame within the invocation that produced
     * it — the suite (bench, verify, tests) never holds a prior call's
@@ -182,7 +125,9 @@ object MemoFrames {
 
   private def supersedeMat(spark: SparkSession, tag: String, newPath: String): Unit = {
     val m = liveMat.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
-    m.get(tag).foreach { old => schemaCache.remove(old); deleteRecursively(old) }
+    m.get(tag).foreach { old =>
+      schemaCache.remove(old); ScratchDirs.deleteRecursively(new java.io.File(old))
+    }
     m(tag) = newPath
   }
 
@@ -203,7 +148,7 @@ object MemoFrames {
     *
     * LIFETIME CONTRACT (ADVICE r11): re-materializing a tag DELETES the
     * previous same-tag file (supersedeMat) — that is the unbounded
-    * /dev/shm growth fix, and it makes the returned frame valid only
+    * tmpfs growth fix, and it makes the returned frame valid only
     * until the SAME tag (or a tag-sharing sibling: the cc_* tags are
     * shared by graph_cc_sizes and llm_dedup_clusters) is materialized
     * again. Callers must consume the frame within the invocation that
@@ -314,10 +259,10 @@ object MemoFrames {
     * session's `spark.sql.shuffle.partitions` (= core count in the bench
     * contract); at sf0.1 the inputs are 0.5-14 MB, so each exchange paid
     * ~32 tasks of pure launch/fetch overhead for kilobytes of data —
-    * measured ~0.3-0.5 s per shuffle stage (ProbeOverhead ladder), and
-    * ProbeParts showed the heavy memo consumers (kcore, label_prop,
-    * pareto, eqdepth, basket_rules, weighted_median) dropping 0.5-1.9 s
-    * each at a size-appropriate count with identical results. The count
+    * measured ~0.3-0.5 s per shuffle stage, and the heavy memo consumers
+    * (kcore, label_prop, pareto, eqdepth, basket_rules, weighted_median)
+    * dropped 0.5-1.9 s each at a size-appropriate count with identical
+    * results. The count
     * derives from the plan's LEAF stats (file sizes for parquet scans —
     * each scan occurrence counted once, so a double-scanned table weighs
     * twice, roughly matching shuffle volume), at ~2 MiB of scan input per

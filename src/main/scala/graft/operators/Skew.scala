@@ -11,7 +11,7 @@ import graft.Tables
   *  - **AQE skew-join** (on by default, `spark.sql.adaptive.skewJoin.*`)
   *    splits oversized shuffle partitions at runtime — the first line of
   *    defense for skewed JOINs; nothing to code. Measured A/B (STRESS.md
-  *    round-15, ProbeSkewAb, 60 M rows): at hot-key share ≤ a few % do
+  *    round-15, 60 M rows): at hot-key share ≤ a few % do
   *    nothing (both mitigations are overhead); at ~10–20% AQE alone
   *    suffices and beats the salt (the replicated-dim shuffle costs more
   *    than the skew); at ≥ ~50%-on-one-key AQE stops helping and the

@@ -30,74 +30,18 @@ import graft.Tables
   */
 object SourcesSinks {
 
-  /** Scratch area outside the repo; keyed by scale factor so sf0.01
-    * verify and sf0.1 bench don't collide, AND by JVM so two live graft
-    * processes never share a staging dir (round 14: a Verify run and a
-    * concurrent test-suite JVM raced on the same evolve_* path — one
-    * overwrite-write deleted the other's _temporary dir mid-commit).
-    * Prefers tmpfs (/dev/shm) when present: the ingest/sink round-trips
-    * measure the ENGINE's encode/decode/plan work, and RAM-backed
-    * staging keeps host-disk contention (±2–4 s observed on /tmp) out
-    * of that measurement. Falls back to /tmp where no tmpfs exists.
-    * Lifecycle mirrors MemoFrames.jvmBase: delete on normal exit, and a
-    * once-per-JVM age-gated sweep (2 h mtime) reaps dirs crashed JVMs
-    * left behind — the per-JVM suffix would otherwise turn the old
-    * fixed path's bounded reuse into unbounded tmpfs growth. */
-  private lazy val scratchRoot: String = {
-    val base = new java.io.File(
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_io"
-      else "/tmp/graft_io")
-    base.mkdirs()
-    try {
-      val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
-      val kids = base.listFiles()
-      if (kids != null) kids.foreach { f =>
-        // reap ANY stale dir here — our own crashed jvm_* dirs, the
-        // pre-round-14 fixed-path staging dirs, and abandoned streaming
-        // checkpoint tempdirs all become garbage within 2 h of last
-        // write. Derby dirs are EXCLUDED: JdbcSink owns their lifecycle
-        // (its own sweep holds a boot-lock probe so a live-but-idle
-        // database is never reaped on age alone). jvm_<pid> dirs whose
-        // owner is STILL ALIVE are also excluded regardless of age
-        // (ADVICE r14): the liveness beacon refreshes mtime only when
-        // scratch() is called, so a session that staged files and then
-        // spent >2 h in non-IO queries would otherwise lose its staging
-        // to a freshly started sibling's sweep mid-read. The age gate
-        // still reaps a dead pid's leftovers (and any unparseable name).
-        val ownerAlive = f.getName match {
-          case s if s.startsWith("jvm_") =>
-            try {
-              val pid = s.stripPrefix("jvm_").toLong
-              pid == ProcessHandle.current().pid() ||
-                ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)
-            } catch { case _: NumberFormatException => false }
-          case _ => false
-        }
-        if (f.isDirectory && !f.getName.startsWith("derby") && !ownerAlive &&
-            f.lastModified() < cutoff)
-          deleteRec(f)
-      }
-    } catch { case _: Throwable => () }
-    val mine = new java.io.File(base, s"jvm_${ProcessHandle.current().pid()}")
-    mine.mkdirs()
-    sys.addShutdownHook(deleteRec(mine))
-    mine.getAbsolutePath
-  }
-  private def deleteRec(f: java.io.File): Unit =
-    try {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(deleteRec); f.delete(); ()
-    } catch { case _: Throwable => () }
+  /** A staging path under this JVM's io dir (ScratchDirs), keyed by
+    * operator and fixture dir so sf0.01 verify and sf0.1 bench never
+    * collide. Every use refreshes the dir's liveness beacon. */
   private def scratch(dir: String, op: String): String = {
-    // liveness beacon (MemoFrames' fix): refresh our dir's mtime on
-    // every use so a >2 h session can't be reaped by a sibling's sweep
-    new java.io.File(scratchRoot).setLastModified(System.currentTimeMillis())
-    s"$scratchRoot/${op}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+    ScratchDirs.touch(ScratchDirs.ioDir)
+    s"${ScratchDirs.ioDir}/${op}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
   }
 
   /** The REAL output path an operator's `scratch(dir, op)` resolved to in
     * this JVM — the one sanctioned way for a TEST to locate a sink's
     * files. Round 14's scratch-isolation commit moved staging under a
-    * per-JVM `jvm_<pid>/` dir and the `sink_zorder` quality gate, which
+    * per-JVM dir and the `sink_zorder` quality gate, which
     * hand-reconstructed the old fixed path, kept passing only against a
     * STALE pre-fix artifact on tmpfs (VERDICT r14 defect #1). Tests must
     * never rebuild staging paths by string concatenation —

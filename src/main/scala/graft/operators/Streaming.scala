@@ -462,19 +462,12 @@ object Streaming {
     } finally conn.close()
   }
 
-  /** A fresh per-call staging/checkpoint dir under the SWEPT io base
-    * (tmpfs where available — same rationale as SourcesSinks.scratch):
-    * the one sanctioned way for streaming calls AND their tests to stage
-    * transient dirs (round 16, ADVICE r15: a spec that rebuilt this path
-    * by hand either leaked outside every sweep or tripped
-    * ScratchPathHygieneSpec's literal ban). Callers still delete it when
-    * done; a crashed JVM's leftovers age into a sibling's 2 h sweep. */
-  private[graft] def ioTempDir(prefix: String): String = {
-    val base = java.nio.file.Paths.get(
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_io" else "/tmp/graft_io")
-    java.nio.file.Files.createDirectories(base)
-    java.nio.file.Files.createTempDirectory(base, prefix).toString
-  }
+  /** A fresh per-call staging/checkpoint dir under this JVM's io dir
+    * (ScratchDirs.tempDir): the one sanctioned way for streaming calls
+    * AND their tests to stage transient dirs, so no spec rebuilds the
+    * path by hand. Callers still delete it when done; JVM exit or the
+    * reap rule collects a crashed run's leftovers. */
+  private[graft] def ioTempDir(prefix: String): String = ScratchDirs.tempDir(prefix).toString
 
   /** `awaitTermination(timeout)` that TURNS A TIMEOUT INTO AN ERROR
     * (ADVICE r15): the boolean-returning overload reports "still running"
@@ -489,18 +482,10 @@ object Streaming {
         s"$what did not terminate within ${timeoutMs / 1000} s — " +
           "hung stream, refusing to emit a partial census")
 
-  /** Best-effort recursive delete of a per-invocation staging dir. */
-  // private[graft]: the kill-test specs stage via ioTempDir and must
-  // clean up through the same helper instead of growing their own
-  // recursive-delete copies (round-16 self-review)
+  /** Best-effort recursive delete of a per-invocation staging dir; the
+    * kill-test specs clean up through it too. */
   private[graft] def deleteStaging(path: String): Unit =
-    try {
-      def rec(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rec)
-        f.delete(); ()
-      }
-      rec(new java.io.File(path))
-    } catch { case _: Throwable => () }
+    ScratchDirs.deleteRecursively(new java.io.File(path))
 
   /** `dropDuplicatesWithinWatermark` as a DECLARED query (VERDICT r7
     * "what's missing" #3 — previously exercised only inside the unit

@@ -359,7 +359,7 @@ object TimeSeries {
     * only corpus-scale work remains the one events scan behind the
     * daily agg. One action, no per-level jobs. */
   def tsChangepointDeep(spark: SparkSession, dir: String): DataFrame = {
-    // Two-materialize shape (round-12 A/B, measured with TimeQ): the
+    // Two-materialize shape (round-12 A/B): the
     // lazy 4-level recursion re-plans the events→daily agg under every
     // level's lineage and AQE schedules 13 escalating stage jobs
     // (3.3 s warm at sf0.1, and 13×~0.4 s of pure scheduling on a

@@ -4,29 +4,21 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-11 hub-collapse pins: the representative-collapsed forms of
-  * llm_minhash / llm_simhash / llm_emb_neardup emit EXACTLY the pair set
-  * of the direct quadratic band/block joins — exceptAll in both
-  * directions on (a) the pristine sf0.001 fixture and (b) a 3× verbatim-
-  * duplicated corpus (the STRESS.md hub mode distilled: every text and
-  * every vector appears three times, so within-class AND cross-class
-  * expansions are both exercised; non-vacuity is asserted via the pair
-  * counts). The collapse SHIPS in llm_emb_neardup (kernel-bound
-  * candidates) and is kept as the measured-and-reverted alternative for
-  * llm_minhash / llm_simhash (output-bound — see the operator
-  * scaladocs); this spec pins all three equalities so whichever form
-  * ships, the other remains a verified drop-in. */
+/** Round-11 hub-collapse pins: the shipped representative-collapsed
+  * llm_emb_neardup emits EXACTLY the pair set of the direct quadratic
+  * label-blocked join — exceptAll in both directions on (a) the pristine
+  * sf0.001 fixture and (b) a 3× verbatim-duplicated corpus (the STRESS.md
+  * hub mode distilled: every vector appears three times, so within-class
+  * AND cross-class expansions are both exercised; non-vacuity is asserted
+  * via the pair counts). A crafted corpus also pins the duplicate-class
+  * semantics of the direct llm_minhash output. */
 class HubCollapseSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** sf0.001 with every doc_id/vec_id cloned at +1e7 and +2e7 strides,
+  /** sf0.001 with every vec_id cloned at +1e7 and +2e7 strides,
     * payloads verbatim — written once per test run. */
   private lazy val dupDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_hub_").toString
-    val docs = Tables.documents(spark, TestSpark.sf0001)
-    (0 until 3).map(k => docs.withColumn("doc_id", col("doc_id") + lit(k * 10000000L)))
-      .reduce(_ unionByName _)
-      .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val emb = Tables.embeddings(spark, TestSpark.sf0001)
     (0 until 3).map(k => emb.withColumn("vec_id", col("vec_id") + lit(k * 10000000L)))
       .reduce(_ unionByName _)
@@ -44,8 +36,7 @@ class HubCollapseSpec extends AnyFunSuite {
 
   /** Crafted corpus hitting the semantics the fixture-derived pins may
     * never exercise: NULL text (null token array → null band hashes —
-    * the direct band join silently drops these docs, so the collapsed
-    * within-class branch must too), token MULTISET variants that
+    * the band join drops these docs), token MULTISET variants that
     * normalize to one set ("a b" / "b a" / "a a b" are one duplicate
     * class for minhash: toks = sorted DISTINCT hashes), singletons, and
     * for embeddings a zero-norm vector pair (cosine 0/0 = NaN; Spark's
@@ -77,18 +68,12 @@ class HubCollapseSpec extends AnyFunSuite {
   }
 
   test("crafted edge corpus: null texts, multiset-equal classes, zero vectors, cross-label dups") {
-    val mc = operators.LlmOps.llmMinhashCollapsed(spark, craftedDir)
-    val md = operators.LlmOps.llmMinhash(spark, craftedDir)
-    assertPairSetEqual("llm_minhash[crafted]", mc, md)
-    val mRows = md.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val mRows = operators.LlmOps.llmMinhash(spark, craftedDir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // the multiset class {1,2,3} pairs fully; the verbatim pair (4,5) too
     assert(Set((1L, 2L), (1L, 3L), (2L, 3L), (4L, 5L)).subsetOf(mRows))
-    // null-text docs never pair (null band hashes in BOTH forms)
+    // null-text docs never pair (null band hashes)
     assert(!mRows.exists(p => p._1 == 7L || p._2 == 7L || p._1 == 8L || p._2 == 8L))
-
-    assertPairSetEqual("llm_simhash[crafted]",
-      operators.LlmOpsExtra.llmSimhashCollapsed(spark, craftedDir),
-      operators.LlmOpsExtra.llmSimhash(spark, craftedDir))
 
     val ec = operators.LlmOpsExtra.llmEmbNeardup(spark, craftedDir)
     val ed = operators.LlmOpsExtra.llmEmbNeardupDirect(spark, craftedDir)
@@ -104,6 +89,7 @@ class HubCollapseSpec extends AnyFunSuite {
     assert(!eRows.contains((1L, 5L)) && !eRows.contains((2L, 5L)) && !eRows.contains((3L, 5L)))
   }
 
+  // the name predates crossClassPairs' removal; kept so the test's id is stable
   test("dupClassPairs / crossClassPairs HOF expansions: exact pair sets and edge cases") {
     import spark.implicits._
     def evalPairs(c: org.apache.spark.sql.Column): Seq[(Long, Long)] =
@@ -116,48 +102,12 @@ class HubCollapseSpec extends AnyFunSuite {
     // singleton and empty classes expand to nothing
     assert(evalPairs(operators.LlmOps.dupClassPairs(typedLit(Seq(7L)))).isEmpty)
     assert(evalPairs(operators.LlmOps.dupClassPairs(typedLit(Seq.empty[Long]))).isEmpty)
-    // cross-class cartesian with interleaved ids normalized via least/greatest
-    assert(evalPairs(operators.LlmOps.crossClassPairs(
-        typedLit(Seq(1L, 5L)), typedLit(Seq(3L))))
-      == Seq((1L, 3L), (3L, 5L)))
-    assert(evalPairs(operators.LlmOps.crossClassPairs(
-        typedLit(Seq.empty[Long]), typedLit(Seq(3L)))).isEmpty)
-  }
-
-  test("llm_minhash collapsed == direct on pristine sf0.001") {
-    assertPairSetEqual("llm_minhash",
-      operators.LlmOps.llmMinhashCollapsed(spark, TestSpark.sf0001),
-      operators.LlmOps.llmMinhash(spark, TestSpark.sf0001))
-  }
-
-  test("llm_simhash collapsed == direct on pristine sf0.001") {
-    assertPairSetEqual("llm_simhash",
-      operators.LlmOpsExtra.llmSimhashCollapsed(spark, TestSpark.sf0001),
-      operators.LlmOpsExtra.llmSimhash(spark, TestSpark.sf0001))
   }
 
   test("llm_emb_neardup shipped (collapsed) == direct on pristine sf0.001") {
     assertPairSetEqual("llm_emb_neardup",
       operators.LlmOpsExtra.llmEmbNeardup(spark, TestSpark.sf0001),
       operators.LlmOpsExtra.llmEmbNeardupDirect(spark, TestSpark.sf0001))
-  }
-
-  test("llm_minhash collapsed == direct on the 3x verbatim-duplicated corpus") {
-    val nDocs = spark.read.parquet(s"$dupDir/documents.parquet").count()
-    val pairs = assertPairSetEqual("llm_minhash",
-      operators.LlmOps.llmMinhashCollapsed(spark, dupDir),
-      operators.LlmOps.llmMinhash(spark, dupDir))
-    // every non-empty doc sits in a 3-member class → ≥ C(3,2) pairs per
-    // original doc; far more than nDocs ⇒ the within+cross branches fired
-    assert(pairs >= nDocs, s"hub pin vacuous: $pairs pairs for $nDocs docs")
-  }
-
-  test("llm_simhash collapsed == direct on the 3x verbatim-duplicated corpus") {
-    val nDocs = spark.read.parquet(s"$dupDir/documents.parquet").count()
-    val pairs = assertPairSetEqual("llm_simhash",
-      operators.LlmOpsExtra.llmSimhashCollapsed(spark, dupDir),
-      operators.LlmOpsExtra.llmSimhash(spark, dupDir))
-    assert(pairs >= nDocs, s"hub pin vacuous: $pairs pairs for $nDocs docs")
   }
 
   test("llm_emb_neardup shipped (collapsed) == direct on the 3x duplicated embeddings") {

@@ -31,38 +31,4 @@ class JdbcSinkSpec extends AnyFunSuite {
     assert(second.length == first)
     assert(second.sameElements(direct))
   }
-
-  test("stale-dir sweep reaps dead dirs, keeps young and lock-held ones") {
-    val root = java.nio.file.Files.createTempDirectory("graft_sweep_").toFile
-    def mk(name: String, ageMs: Long, withLck: Boolean): java.io.File = {
-      val d = new java.io.File(root, name); d.mkdirs()
-      if (withLck) {
-        val lck = new java.io.File(d, "dbex.lck")
-        java.nio.file.Files.write(lck.toPath, Array[Byte](1))
-        lck.setLastModified(System.currentTimeMillis() - ageMs)
-      }
-      d.setLastModified(System.currentTimeMillis() - ageMs)
-      d
-    }
-    val dead = mk("derby_dead1", 7200000, withLck = true)   // old, unlocked
-    val bare = mk("derby_dead2", 7200000, withLck = false)  // old, no lck
-    val young = mk("derby_young", 1000, withLck = false)    // too recent
-    val other = mk("not_derby", 7200000, withLck = false)   // wrong prefix
-    // simulate a LIVE owner: hold an exclusive FileLock on dbex.lck
-    val live = mk("derby_live", 7200000, withLck = true)
-    val ch = java.nio.channels.FileChannel.open(
-      new java.io.File(live, "dbex.lck").toPath,
-      java.nio.file.StandardOpenOption.WRITE)
-    val lock = ch.lock()
-    try JdbcSink.sweepStale(root, System.currentTimeMillis() - 3600000)
-    finally { lock.release(); ch.close() }
-    assert(!dead.exists, "old unlocked dir must be reaped")
-    assert(!bare.exists, "old lck-less dir must be reaped")
-    assert(young.exists, "young dir must survive the age gate")
-    assert(other.exists, "non-derby dirs are never touched")
-    assert(live.exists, "a lock-held dir must survive even when old")
-    JdbcSink.sweepStale(root, System.currentTimeMillis() + 10000)
-    assert(!live.exists, "released lock -> reapable (proves the probe, not the age, protected it)")
-    val _ = root.delete()
-  }
 }

@@ -3,45 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (Spark session startup
-  * is ~5 s — per-suite sessions would dominate test time). Config mirrors
-  * the driver harness: local[4], shuffle=4, UTC, nanosAsLong. */
+  * is ~5 s — per-suite sessions would dominate test time). The production
+  * settings at a fixed local[4], whatever the host's core count, so the
+  * plan fingerprints in plan_snapshot.json do not depend on the host. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Generated-class names WITHOUT the codegen-stage id (round 17):
-      // with the default useIdInClassName=true the per-plan stage counter
-      // is baked into every generated class NAME, so the same subplan
-      // re-planned under a shifted numbering is a janino cache MISS —
-      // measured 117 recompiled classes PER INVOCATION on
-      // ts_changepoint_deep (0 with the id off; the id exists for
-      // debugging readability only). Scale-independent.
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      // codegen class cache sized for the suite (round 18 — default 100
-      // entries cycles several times over a 323-query run; see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // Session-artifact classloader isolation OFF (round 18): the codegen
-      // class cache keys on (classloader, source), and with isolation on
-      // every CLONED session — each streaming-query run clones — carries a
-      // fresh classloader, so identical generated sources recompile per
-      // stream start (measured 10-20 classes/rep on the stream family; 0
-      // with this off). This engine registers no per-session artifacts, so
-      // isolation buys nothing here at any scale.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      // GC'd reliable checkpoints (pagerank, dedup clusters — eager at
-      // query construction, so every suite writes them) delete their
-      // tmpfs files instead of accumulating across test runs
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+    val s = GraftSession.builder(4)
       // static conf — needed by BucketingSpec's saveAsTable, kept out of
       // the repo tree
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
