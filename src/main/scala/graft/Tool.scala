@@ -1,8 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.{AtomicInteger, LongAdder}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import scala.util.control.NonFatal
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev tool for declared queries; not part of the driver surface.
@@ -40,53 +39,44 @@ object Tool {
     spark
   }
 
-  /** Counts jobs and task spill for `time`; prints one line per completed
-    * stage for `stages`. */
-  private final class Telemetry(printStages: Boolean) extends SparkListener {
-    val jobs = new AtomicInteger()
-    val spillMem = new LongAdder()
-    val spillDisk = new LongAdder()
-    override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) { spillMem.add(m.memoryBytesSpilled); spillDisk.add(m.diskBytesSpilled) }
-    }
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val si = sc.stageInfo; val m = si.taskMetrics
-      if (printStages && m != null) {
-        val nm = si.name.takeWhile(_ != '(').trim
-        println(f"STAGE ${si.stageId}%4d $nm%-28s tasks=${si.numTasks}%3d " +
-          f"run=${m.executorRunTime / 1e3}%7.2f cpu=${m.executorCpuTime / 1e9}%7.2f " +
-          f"srdB=${m.shuffleReadMetrics.totalBytesRead / 1e6}%8.1fM " +
-          f"swrB=${m.shuffleWriteMetrics.bytesWritten / 1e6}%8.1fM " +
-          f"srdR=${m.shuffleReadMetrics.recordsRead}%9d " +
-          f"out=${m.outputMetrics.recordsWritten}%9d")
-      }
-    }
-  }
-
   private def timed(sfDir: String, reps: Int, names: Seq[String],
       printStages: Boolean): Unit = {
     val spark = session("WARN")
-    val t = new Telemetry(printStages)
-    spark.sparkContext.addSparkListener(t)
+    val ledger = new QueryLedger
+    spark.sparkContext.addSparkListener(ledger)
+    if (printStages) spark.sparkContext.addSparkListener(new SparkListener {
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val si = sc.stageInfo; val m = si.taskMetrics
+        if (m != null) {
+          val nm = si.name.takeWhile(_ != '(').trim
+          println(f"STAGE ${si.stageId}%4d $nm%-28s tasks=${si.numTasks}%3d " +
+            f"run=${m.executorRunTime / 1e3}%7.2f cpu=${m.executorCpuTime / 1e9}%7.2f " +
+            f"srdB=${m.shuffleReadMetrics.totalBytesRead / 1e6}%8.1fM " +
+            f"swrB=${m.shuffleWriteMetrics.bytesWritten / 1e6}%8.1fM " +
+            f"srdR=${m.shuffleReadMetrics.recordsRead}%9d " +
+            f"out=${m.outputMetrics.recordsWritten}%9d")
+        }
+      }
+    })
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000).count()
     names.foreach { n =>
       (1 to reps).foreach { r =>
-        // the pauses let the async listener bus drain, so job and spill
-        // deltas belong to this rep alone
-        Thread.sleep(300)
-        val j0 = t.jobs.get(); val sm0 = t.spillMem.sum(); val sd0 = t.spillDisk.sum()
+        val group = s"$n#$r"
+        spark.sparkContext.setJobGroup(group, n, false)
         val t0 = System.nanoTime()
-        val c = SparkEntry.queries(n)(spark, sfDir).count()
+        val c = try SparkEntry.queries(n)(spark, sfDir).count()
+          finally spark.sparkContext.clearJobGroup()
         val dt = (System.nanoTime() - t0) / 1e9
+        // the pause lets the async listener bus deliver this rep's stages
+        // and counts before its TIME line
+        Thread.sleep(300)
         if (printStages) println(f"TIME $n rep=$r $dt%.2f s rows=$c")
         else {
-          Thread.sleep(300)
-          println(f"TIME $n rep=$r $dt%.2f s rows=$c jobs=${t.jobs.get() - j0} " +
-            f"spill_mem=${(t.spillMem.sum() - sm0) / 1e6}%.0fMB " +
-            f"spill_disk=${(t.spillDisk.sum() - sd0) / 1e6}%.0fMB")
+          val l = ledger(group)
+          println(f"TIME $n rep=$r $dt%.2f s rows=$c jobs=${l.jobs.sum} " +
+            f"spill_mem=${l.spillMemBytes.sum / 1e6}%.0fMB " +
+            f"spill_disk=${l.spillDiskBytes.sum / 1e6}%.0fMB")
         }
       }
     }
@@ -126,7 +116,7 @@ object Tool {
       println(s"\n========== $n ==========")
       try SparkEntry.queries.get(n).orElse(inner.get(n)).get(spark, sfDir)
         .explain("formatted")
-      catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
+      catch { case NonFatal(e) => println(s"explain failed: ${e.getMessage}") }
     }
     spark.stop()
   }

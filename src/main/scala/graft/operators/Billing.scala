@@ -282,16 +282,10 @@ object Billing {
     MemoFrames.withShufflePartitions(spark, nParts) {
       clean.repartition(col("month"))
         .write.mode("overwrite").partitionBy("month").parquet(s"$out/sink")
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try
-        normalize(delivered.filter(substring(col("ship"), 1, 7) === "1996-03"))
-          .repartition(col("month")) // re-deliver one month
-          .write.mode("overwrite").partitionBy("month").parquet(s"$out/sink")
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      normalize(delivered.filter(substring(col("ship"), 1, 7) === "1996-03"))
+        .repartition(col("month")) // re-deliver one month
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("month").parquet(s"$out/sink")
     }
     spark.read.schema(clean.schema).parquet(s"$out/sink")
       .groupBy("month")

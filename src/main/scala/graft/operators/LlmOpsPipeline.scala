@@ -281,16 +281,10 @@ object LlmOpsPipeline {
     MemoFrames.withShufflePartitions(spark, MemoFrames.scaleParts(spark, raw, 1.0)) {
       clean.repartition(col("lang"))
         .write.mode("overwrite").partitionBy("lang").parquet(s"$out/sink")
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try
-        qualityDedup(raw.filter(col("lang") === "en")) // re-deliver one lang
-          .repartition(col("lang"))
-          .write.mode("overwrite").partitionBy("lang").parquet(s"$out/sink")
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      qualityDedup(raw.filter(col("lang") === "en")) // re-deliver one lang
+        .repartition(col("lang"))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("lang").parquet(s"$out/sink")
     }
     val base = spark.read.schema(clean.schema).parquet(s"$out/sink")
       .select(col("doc_id"), col("lang"), col("source"),

@@ -261,15 +261,9 @@ object SourcesSinks {
       .withColumn("month", date_format(col("o_orderdate"), "yyyy-MM"))
     orders.repartition(col("month"))
       .write.mode("overwrite").partitionBy("month").parquet(out)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      orders.filter(col("month") === "1996-03") // re-deliver one month
-        .write.mode("overwrite").partitionBy("month").parquet(out)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    orders.filter(col("month") === "1996-03") // re-deliver one month
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("month").parquet(out)
     readBack(spark, orders, out).agg(
       count(lit(1)).as("total_rows"),
       count(when(col("month") === "1996-03", lit(1))).as("march96_rows"),

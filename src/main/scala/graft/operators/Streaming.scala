@@ -241,7 +241,7 @@ object Streaming {
         .foreach { f =>
           val dest = new java.io.File(destDay, f.getName).toPath
           try { java.nio.file.Files.createLink(dest, f.toPath); () }
-          catch { case _: Throwable =>
+          catch { case _: java.io.IOException | _: UnsupportedOperationException =>
             java.nio.file.Files.copy(f.toPath, dest); () }
         }
     }

@@ -13,7 +13,7 @@ class SharedArtifactsSpec extends AnyFunSuite {
 
   test("all declared shared artifacts build and are non-degenerate at sf0.001") {
     val dir = "/root/testdata/sf0.001"
-    val counts = operators.SharedArtifacts.enumerate(spark, dir).map {
+    val counts = operators.SharedArtifacts.artifacts(spark, dir).map {
       case (name, f) => name -> f().count()
     }
     assert(counts.nonEmpty)

@@ -13,15 +13,14 @@
 # anything the driver shows.
 #
 # Usage: tools/bench_contended.sh [n_hogs] [out_json]
-#   SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS pass through to Bench
-#   (defaults: /root/testdata/sf0.1, 32 — the driver's config).
+#   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and SPARK_GRAFT_CPUS
+#   (default: GraftSession's) pass through to Bench.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 NHOGS="${1:-$(( $(nproc) / 2 ))}"
 OUT="${2:-bench/BENCH_CONTENDED_latest.json}"
 export SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
-export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
 
 hog_pids=()
 cleanup() { kill "${hog_pids[@]}" 2>/dev/null || true; }

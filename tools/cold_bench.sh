@@ -7,9 +7,8 @@
 # first-session cost (cold page cache for the fixture scans feeding the
 # builds, cold janino/JIT for the build plans, cold memo/staging dirs).
 # This script wipes every scratch/memo base the engine can read from and
-# runs the FULL bench once in a fresh forked JVM with the warm-artifact
-# ledger ENABLED: the run's `warm_artifacts.secs` column then IS the
-# cold-start ledger — the worst-case first-session tax, committed next
+# runs the FULL bench once in a fresh forked JVM: the run's
+# `warm_artifacts.secs` column then IS the cold-start ledger — the worst-case first-session tax, committed next
 # to the warm numbers in BASELINE.md.
 #
 # Wiped bases (identical to cold_cert.sh; nothing under /root/testdata
@@ -17,7 +16,7 @@
 #   /dev/shm/graft_io /dev/shm/graft-memo /tmp/graft_io /tmp/graft-memo
 #
 # Usage: tools/cold_bench.sh [out.json]     # default bench/BENCH_COLDSCRATCH_latest.json
-# Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS (default 32)
+# Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1); SPARK_GRAFT_CPUS passes through
 set -u
 cd "$(dirname "$0")/.."
 OUT="${1:-bench/BENCH_COLDSCRATCH_latest.json}"
@@ -31,11 +30,10 @@ for d in /dev/shm/graft_io /dev/shm/graft-memo /tmp/graft_io /tmp/graft-memo; do
   echo "COLDBENCH   wiped $d"
 done
 
-echo "COLDBENCH bench (cold JVM, cold scratch, warm-artifact ledger ON)"
+echo "COLDBENCH bench (cold JVM, cold scratch)"
 # absolute out paths pass through; relative ones anchor at the repo root
 case "$OUT" in /*) OUT_ABS="$OUT";; *) OUT_ABS="$(pwd)/$OUT";; esac
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
 SPARK_GRAFT_BENCH_OUT="$OUT_ABS" \
 sbt -batch "runMain graft.Bench"
 rc=$?
