@@ -7,6 +7,56 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
+/** The KMV buffer both sketches carry: the k smallest xxhash64 values
+  * (seed 42) of the non-null inputs, stored sign-flipped so TreeSet's
+  * signed order equals unsigned hash order. `merge` keeps the k smallest
+  * of the union, so partials merge in any order. */
+trait KmvSketch extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]] {
+  def child: Expression
+  def k: Int
+
+  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
+    new java.util.TreeSet[java.lang.Long]()
+
+  /** Keep the flipped hash `f` if it is among the k smallest seen. */
+  private def insert(buf: java.util.TreeSet[java.lang.Long], f: Long): Unit =
+    if (buf.size < k) buf.add(f)
+    else if (f < buf.last) { buf.add(f); if (buf.size > k) buf.remove(buf.last) }
+
+  override def update(
+      buf: java.util.TreeSet[java.lang.Long], input: InternalRow): java.util.TreeSet[java.lang.Long] = {
+    val v = child.eval(input)
+    if (v != null) insert(buf, XxHash64Function.hash(v, child.dataType, 42L) ^ Long.MinValue)
+    buf
+  }
+
+  override def merge(
+      b1: java.util.TreeSet[java.lang.Long],
+      b2: java.util.TreeSet[java.lang.Long]): java.util.TreeSet[java.lang.Long] = {
+    b2.forEach(f => insert(b1, f.longValue()))
+    b1
+  }
+
+  override def serialize(buf: java.util.TreeSet[java.lang.Long]): Array[Byte] = {
+    val bb = ByteBuffer.allocate(4 + buf.size * 8)
+    bb.putInt(buf.size)
+    buf.forEach(v => bb.putLong(v.longValue()))
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): java.util.TreeSet[java.lang.Long] = {
+    val bb = ByteBuffer.wrap(bytes)
+    val n = bb.getInt
+    val buf = createAggregationBuffer()
+    var i = 0
+    while (i < n) { buf.add(bb.getLong); i += 1 }
+    buf
+  }
+
+  override def nullable: Boolean = false
+  override def children: Seq[Expression] = Seq(child)
+}
+
 /** KMV (k-minimum-values) distinct-count sketch as a
   * `TypedImperativeAggregate` — the custom-UDAF seam for mergeable
   * sketches (SURVEY §4.3's taxonomy).
@@ -27,39 +77,7 @@ case class KmvDistinct(
     k: Int = 256,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]] {
-
-  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
-    new java.util.TreeSet[java.lang.Long]()
-
-  /** Hashes are stored sign-flipped so TreeSet's signed order equals
-    * unsigned hash order. */
-  private def flip(h: Long): Long = h ^ Long.MinValue
-
-  private def add(buf: java.util.TreeSet[java.lang.Long], h: Long): Unit = {
-    val f = flip(h)
-    if (buf.size < k) buf.add(f)
-    else if (f < buf.last) { buf.add(f); if (buf.size > k) buf.remove(buf.last) }
-  }
-
-  override def update(
-      buf: java.util.TreeSet[java.lang.Long], input: InternalRow): java.util.TreeSet[java.lang.Long] = {
-    val v = child.eval(input)
-    if (v != null) add(buf, XxHash64Function.hash(v, child.dataType, 42L))
-    buf
-  }
-
-  override def merge(
-      b1: java.util.TreeSet[java.lang.Long],
-      b2: java.util.TreeSet[java.lang.Long]): java.util.TreeSet[java.lang.Long] = {
-    val it = b2.iterator()
-    while (it.hasNext) {
-      val f = it.next().longValue()
-      if (b1.size < k) b1.add(f)
-      else if (f < b1.last) { b1.add(f); if (b1.size > k) b1.remove(b1.last) }
-    }
-    b1
-  }
+    extends KmvSketch {
 
   override def eval(buf: java.util.TreeSet[java.lang.Long]): Any =
     if (buf.size < k) buf.size.toLong
@@ -70,25 +88,7 @@ case class KmvDistinct(
       math.round((k - 1) / (u / 1.8446744073709552e19))
     }
 
-  override def serialize(buf: java.util.TreeSet[java.lang.Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.size * 8)
-    bb.putInt(buf.size)
-    buf.forEach(v => bb.putLong(v.longValue()))
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): java.util.TreeSet[java.lang.Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = createAggregationBuffer()
-    var i = 0
-    while (i < n) { buf.add(bb.getLong); i += 1 }
-    buf
-  }
-
   override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
   override def prettyName: String = "kmv_distinct"
 
   override def withNewMutableAggBufferOffset(newOffset: Int): KmvDistinct =
@@ -104,7 +104,7 @@ case class KmvDistinct(
   * the ascending `array<bigint>` of the k smallest sign-flipped xxhash64
   * values (flipped so ascending signed order == ascending unsigned hash
   * order — the exact buffer KmvDistinct carries). This is the theta-union
-  * seam (SURVEY §2.D addendum, VERDICT r11 task 2): per-source states are
+  * seam (SURVEY §2.D addendum): per-source states are
   * plain array columns, so the cross-source UNION is pure column algebra —
   * `array_sort(array_distinct(flatten(collect_list(state))))` truncated
   * to k — executable by ANY engine reading the sketch table, no UDF and
@@ -115,9 +115,8 @@ case class KmvDistinct(
   * the direct sketch's — ThetaUnionSpec pins that, plus state-level
   * merge commutativity and partition invariance.
   *
-  * Buffer/update/merge/serde are shared with KmvDistinct verbatim (same
-  * hash seed 42, same truncation rule); only `eval` and `dataType`
-  * differ. Estimate from a state array (engine- or SQL-side):
+  * Buffer, update, merge and serde are KmvDistinct's (KmvSketch); only
+  * `eval`, `dataType` and `prettyName` differ. Estimate from a state array (engine- or SQL-side):
   * size < k ⇒ exact size; else (k−1)·2^64 / unsigned(kth) where
   * unsigned(kth) = flipped_kth + 2^63. */
 case class KmvState(
@@ -125,37 +124,7 @@ case class KmvState(
     k: Int = 256,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]] {
-
-  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
-    new java.util.TreeSet[java.lang.Long]()
-
-  private def flip(h: Long): Long = h ^ Long.MinValue
-
-  private def add(buf: java.util.TreeSet[java.lang.Long], h: Long): Unit = {
-    val f = flip(h)
-    if (buf.size < k) buf.add(f)
-    else if (f < buf.last) { buf.add(f); if (buf.size > k) buf.remove(buf.last) }
-  }
-
-  override def update(
-      buf: java.util.TreeSet[java.lang.Long], input: InternalRow): java.util.TreeSet[java.lang.Long] = {
-    val v = child.eval(input)
-    if (v != null) add(buf, XxHash64Function.hash(v, child.dataType, 42L))
-    buf
-  }
-
-  override def merge(
-      b1: java.util.TreeSet[java.lang.Long],
-      b2: java.util.TreeSet[java.lang.Long]): java.util.TreeSet[java.lang.Long] = {
-    val it = b2.iterator()
-    while (it.hasNext) {
-      val f = it.next().longValue()
-      if (b1.size < k) b1.add(f)
-      else if (f < b1.last) { b1.add(f); if (b1.size > k) b1.remove(b1.last) }
-    }
-    b1
-  }
+    extends KmvSketch {
 
   override def eval(buf: java.util.TreeSet[java.lang.Long]): Any = {
     val out = new Array[Long](buf.size)
@@ -165,25 +134,7 @@ case class KmvState(
     new GenericArrayData(out)
   }
 
-  override def serialize(buf: java.util.TreeSet[java.lang.Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + buf.size * 8)
-    bb.putInt(buf.size)
-    buf.forEach(v => bb.putLong(v.longValue()))
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): java.util.TreeSet[java.lang.Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = createAggregationBuffer()
-    var i = 0
-    while (i < n) { buf.add(bb.getLong); i += 1 }
-    buf
-  }
-
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
   override def prettyName: String = "kmv_state"
 
   override def withNewMutableAggBufferOffset(newOffset: Int): KmvState =

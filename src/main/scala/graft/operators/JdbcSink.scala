@@ -5,12 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** JDBC sink — the warehouse-loader capability (aggregate → INSERT into an
-  * external SQL store via `df.write.format("jdbc")`), previously doc-only
-  * (SURVEY §2.A r1-r5: "no ClickHouse, no driver jar offline"). Round-6
-  * probe found Apache Derby 10.16 on the Spark unmanaged classpath
-  * (/opt/spark/jars/derby*.jar — it ships with Spark for the Hive
-  * metastore), so the write path now runs for real against an EMBEDDED
-  * Derby database and the round-trip is oracle-checked end to end:
+  * external SQL store via `df.write.format("jdbc")`). It runs against an
+  * EMBEDDED Derby database, which ships on Spark's classpath for the Hive
+  * metastore and stands in for ClickHouse, and the round-trip is
+  * oracle-checked end to end:
   * aggregate orders → JDBC overwrite-write → JDBC read-back.
   *
   * Production (ClickHouse) deployment notes — same code, different URL +
@@ -59,7 +57,7 @@ object JdbcSink {
   }
 
   /** This JVM's embedded-Derby connection URL, shared with the streaming
-    * warehouse sink (`stream_jdbc_sink` — round 16): one database per
+    * warehouse sink (`stream_jdbc_sink`): one database per
     * JVM, separate tables per operator. Refreshes the database dir's
     * liveness beacon on every use (a no-op before Derby first creates
     * the dir). */
@@ -68,8 +66,15 @@ object JdbcSink {
     s"jdbc:derby:$dbPath;create=true"
   }
 
+  /** Reader/writer options for `table` in this JVM's Derby database. */
+  private def derby(table: String): Map[String, String] = Map("url" -> jdbcUrl,
+    "driver" -> "org.apache.derby.jdbc.EmbeddedDriver", "dbtable" -> table)
+
+  /** `table` read back through the JDBC source. */
+  private[graft] def read(spark: SparkSession, table: String): DataFrame =
+    spark.read.format("jdbc").options(derby(table)).load()
+
   def jdbcSink(spark: SparkSession, dir: String): DataFrame = {
-    val url = jdbcUrl
     val agg = Tables.orders(spark, dir)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
@@ -77,18 +82,12 @@ object JdbcSink {
     agg.coalesce(1) // 5-row dim load: one connection, one batch
       .write.format("jdbc")
       .mode(SaveMode.Overwrite)
-      .option("url", url)
-      .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-      .option("dbtable", "load_summary")
+      .options(derby("load_summary"))
       .option("batchsize", "1000")
       // Derby's dialect maps StringType to CLOB; pin a comparable type
       .option("createTableColumnTypes", "o_orderpriority VARCHAR(20)")
       .save()
-    spark.read.format("jdbc")
-      .option("url", url)
-      .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-      .option("dbtable", "load_summary")
-      .load()
+    read(spark, "load_summary")
       .select(col("o_orderpriority"), col("n"), col("rev"))
       .orderBy(col("o_orderpriority").asc)
   }

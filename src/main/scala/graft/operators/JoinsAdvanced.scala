@@ -287,6 +287,23 @@ object JoinsAdvanced {
     "join_interval"        -> (joinInterval _),
     "join_interval_native" -> (joinIntervalNative _))
 
+  private val asofOracle =
+    """WITH j AS (
+      |  SELECT e.event_id, e.ts, e.user_id, o.o_orderkey, o.o_orderdate,
+      |    row_number() OVER (PARTITION BY e.event_id
+      |      ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
+      |  FROM events e JOIN orders o
+      |    ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts)
+      |SELECT event_id, ts, user_id, o_orderdate AS best_orderdate, o_orderkey AS best_orderkey
+      |FROM j WHERE rn = 1 ORDER BY event_id ASC""".stripMargin
+
+  private val intervalOracle =
+    """SELECT a.event_id, count(*) AS n
+      |FROM events a JOIN events b
+      |  ON a.user_id = b.user_id
+      | AND b.ts >= a.ts AND b.ts < a.ts + INTERVAL 1 HOUR
+      |GROUP BY a.event_id ORDER BY a.event_id ASC""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
     "join_asof_tolerance" ->
       """WITH j AS (
@@ -343,34 +360,8 @@ object JoinsAdvanced {
         |  WHERE v.event_type = 'view' AND p.event_type = 'purchase')
         |SELECT event_id, ts, user_id, p_ts AS next_ts, p_id AS next_id
         |FROM j WHERE rn = 1 ORDER BY event_id ASC""".stripMargin,
-    "join_asof" ->
-      """WITH j AS (
-        |  SELECT e.event_id, e.ts, e.user_id, o.o_orderkey, o.o_orderdate,
-        |    row_number() OVER (PARTITION BY e.event_id
-        |      ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
-        |  FROM events e JOIN orders o
-        |    ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts)
-        |SELECT event_id, ts, user_id, o_orderdate AS best_orderdate, o_orderkey AS best_orderkey
-        |FROM j WHERE rn = 1 ORDER BY event_id ASC""".stripMargin,
-    "join_asof_native" ->
-      """WITH j AS (
-        |  SELECT e.event_id, e.ts, e.user_id, o.o_orderkey, o.o_orderdate,
-        |    row_number() OVER (PARTITION BY e.event_id
-        |      ORDER BY o.o_orderdate DESC, o.o_orderkey DESC) AS rn
-        |  FROM events e JOIN orders o
-        |    ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts)
-        |SELECT event_id, ts, user_id, o_orderdate AS best_orderdate, o_orderkey AS best_orderkey
-        |FROM j WHERE rn = 1 ORDER BY event_id ASC""".stripMargin,
-    "join_interval" ->
-      """SELECT a.event_id, count(*) AS n
-        |FROM events a JOIN events b
-        |  ON a.user_id = b.user_id
-        | AND b.ts >= a.ts AND b.ts < a.ts + INTERVAL 1 HOUR
-        |GROUP BY a.event_id ORDER BY a.event_id ASC""".stripMargin,
-    "join_interval_native" ->
-      """SELECT a.event_id, count(*) AS n
-        |FROM events a JOIN events b
-        |  ON a.user_id = b.user_id
-        | AND b.ts >= a.ts AND b.ts < a.ts + INTERVAL 1 HOUR
-        |GROUP BY a.event_id ORDER BY a.event_id ASC""".stripMargin)
+    "join_asof" -> asofOracle,
+    "join_asof_native" -> asofOracle,
+    "join_interval" -> intervalOracle,
+    "join_interval_native" -> intervalOracle)
 }

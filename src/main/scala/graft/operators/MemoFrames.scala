@@ -3,14 +3,12 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-(session, key) memoization of expensive shared frames as PARQUET
-  * files — the round-8 replacement for the round-7 `.checkpoint()` +
-  * WeakHashMap-of-DataFrames pattern.
+  * files, in place of `.checkpoint()` plus a map of DataFrames.
   *
   * Why parquet files instead of reliable RDD checkpoints:
   *  - the cache can hold PATH STRINGS instead of DataFrames. A cached
-  *    DataFrame strongly references its SparkSession (ADVICE r7: the
-  *    WeakHashMap's values pinned their own keys, so no session entry was
-  *    ever collectable and checkpoint files leaked for the JVM lifetime).
+  *    DataFrame strongly references its SparkSession, so a WeakHashMap of
+  *    DataFrames pins its own keys and its files leak for the JVM lifetime.
   *    Strings reference nothing; a dropped session becomes weakly
   *    reachable, its map entry is collected, and the Cleaner below deletes
   *    its files.
@@ -45,7 +43,7 @@ object MemoFrames {
 
   /** This JVM's memo base — the one sanctioned way for a TEST to locate
     * memoized artifacts on disk (never rebuild the memo root by hand:
-    * ScratchPathHygieneSpec enforces this, VERDICT r14 task 2). */
+    * ScratchPathHygieneSpec enforces this). */
   private[graft] def jvmBaseDir: java.io.File = ScratchDirs.memoDir
 
   /** Holds only the path string — a Cleaner action must not reference the
@@ -90,8 +88,7 @@ object MemoFrames {
       val entries = entriesFor(spark)
       val path = entries.getOrElse(key, {
         val safe = key.replaceAll("[^A-Za-z0-9._-]", "_").take(64)
-        // a session-unique counter rides in the path (round 12, same bug
-        // class as ADVICE r11's arc-table name): memoization is by the
+        // a session-unique counter rides in the path: memoization is by the
         // EXACT key in `entries`, so the path needs no key fidelity —
         // but two distinct keys colliding on (64-char prefix, 32-bit
         // hashCode) must never share a directory
@@ -115,7 +112,7 @@ object MemoFrames {
   /** session → (tag → live mat_* path). A long-lived session repeatedly
     * invoking a per-call-materializing query (weighted median, pareto,
     * eqdepth, basket rules, pagerank/label-prop tops) must not grow
-    * tmpfs without bound (ADVICE r10): when a new call writes the same
+    * tmpfs without bound: when a new call writes the same
     * tag, the PREVIOUS call's file is deleted here. Safe because queries
     * consume their materialized frame within the invocation that produced
     * it — the suite (bench, verify, tests) never holds a prior call's
@@ -146,7 +143,7 @@ object MemoFrames {
     * pre-partitioned edges): parquet forgets partitioning and would
     * re-introduce a per-iteration shuffle there.
     *
-    * LIFETIME CONTRACT (ADVICE r11): re-materializing a tag DELETES the
+    * LIFETIME CONTRACT: re-materializing a tag DELETES the
     * previous same-tag file (supersedeMat) — that is the unbounded
     * tmpfs growth fix, and it makes the returned frame valid only
     * until the SAME tag (or a tag-sharing sibling: the cc_* tags are
@@ -193,8 +190,8 @@ object MemoFrames {
     val dataFiles = fs.listStatus(path)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
     val scan = spark.read.schema(df.schema).parquet(p)
-    // An empty listing must not silently read as "0 rows ⇒ converged"
-    // (ADVICE r10): a future writer config (partitionBy subdirs, a codec
+    // An empty listing must not silently read as "0 rows ⇒ converged":
+    // a future writer config (partitionBy subdirs, a codec
     // naming scheme without the .parquet suffix) would change the layout
     // out from under this flat suffix filter. Falling back to a
     // distributed count keeps the answer exact either way — a plan-empty
@@ -213,9 +210,9 @@ object MemoFrames {
     * `write(path)` (the caller stages whatever layout it needs — e.g. a
     * day-partitioned parquet drop for a streaming file source), every call
     * returns the same path. The files ride the memo dir's three-layer
-    * cleanup. This exists for the streaming replay queries (VERDICT r10
-    * task 2): their staged input drop is a declared pipeline INPUT — in
-    * production the files already exist when the trigger fires — so
+    * cleanup. This exists for the streaming replay queries: their staged
+    * input drop is a declared pipeline INPUT — in production the files
+    * already exist when the trigger fires — so
     * staging belongs with the other per-(session, fixture) artifacts, not
     * inside every timed invocation. The checkpoint dir stays per-call:
     * only the input files are shared; each invocation still discovers,
@@ -233,66 +230,39 @@ object MemoFrames {
       })
     }
 
-  /** Write with AQE disabled for the duration of THIS action. Under AQE
-    * every exchange materializes as its own Spark JOB, so a memo build
-    * with k shuffles/broadcasts schedules ~k+1 jobs — and on the graded
-    * contended driver each job start costs ~0.4 s (BASELINE.md r7
-    * decomposition: the tail is job-count × contention, not data). The
-    * memo builds are fixed-shape plans (explicit broadcasts, explicit
-    * repartitioning, partition counts pinned by the session conf), so
-    * AQE's runtime re-planning adds nothing here — disabling it folds the
-    * whole build into a single job without changing any result row.
-    * Restoring the previous value in `finally` keeps the toggle invisible
-    * to every other query; safe because the write runs synchronously on
-    * this thread and the suite's sessions plan queries sequentially
-    * (Test/fork + single bench thread). */
+  /** Write `df` with AQE off and a size-derived partition count. The memo
+    * builds are fixed-shape plans (explicit broadcasts and repartitioning),
+    * so AQE's runtime re-planning adds nothing, while under AQE every
+    * exchange runs as its own job; off, the build is one job with the same
+    * rows. */
   private def writeNoAqe(df: DataFrame, path: String, expand: Double = 1.0): Unit = {
     val spark = df.sparkSession
     noAqe(spark)(withShufflePartitions(spark, scaleParts(spark, df, expand))(
       df.write.mode("overwrite").parquet(path)))
   }
 
-  /** Size-derived shuffle-partition count for a fixed-shape AQE-off build
-    * (round 17, guide §2: make partitioning scale-adaptive — derive from
-    * input size — rather than a constant tuned for local mode or the
-    * cluster). The AQE-off memo jobs previously ran every exchange at the
-    * session's `spark.sql.shuffle.partitions` (= core count in the bench
-    * contract); at sf0.1 the inputs are 0.5-14 MB, so each exchange paid
-    * ~32 tasks of pure launch/fetch overhead for kilobytes of data —
-    * measured ~0.3-0.5 s per shuffle stage, and the heavy memo consumers
-    * (kcore, label_prop, pareto, eqdepth, basket_rules, weighted_median)
-    * dropped 0.5-1.9 s each at a size-appropriate count with identical
-    * results. The count
-    * derives from the plan's LEAF stats (file sizes for parquet scans —
-    * each scan occurrence counted once, so a double-scanned table weighs
-    * twice, roughly matching shuffle volume), at ~2 MiB of scan input per
-    * post-shuffle partition (compressed parquet expands ~3-5× in flight,
-    * so this lands partitions in the ~10 MB band the fetch path likes).
-    * CLAMPED to the session's configured count: the derivation can only
-    * shrink a build whose measured input cannot fill the configured
-    * parallelism, never exceed what the deployment asked for — at 10×/
-    * 100× fixtures the derived count rises back to (and saturates at)
-    * the session value, and on a production cluster whose session sets
-    * thousands of partitions, corpus-scale builds keep them while
-    * artifact-scale builds stop paying for them. Leaf-stats failures
-    * (exotic relations) fall back to the session value — today's
-    * behavior.
+  /** Size-derived shuffle-partition count for a fixed-shape AQE-off build,
+    * so per-task launch and fetch overhead stays proportional to the data
+    * rather than to the session's core count. The count derives from the
+    * plan's leaf stats (file sizes for parquet scans; a double-scanned
+    * table weighs twice, roughly matching shuffle volume), at ~2 MiB of
+    * scan input per post-shuffle partition (compressed parquet expands
+    * ~3-5× in flight, landing partitions near ~10 MB). It is clamped to
+    * the session's configured count: the derivation only shrinks a build
+    * whose input cannot fill the configured parallelism, never exceeds
+    * what the deployment asked for. Leaf-stats failures fall back to the
+    * session value.
     *
-    * `expand` is a caller-supplied EXPANSION factor, for operators that
+    * `expand` is a caller-supplied expansion factor, for operators that
     * run their own actions (training collects, streaming starts,
     * pipeline writes) over plans whose shuffle volume is a known multiple
-    * of the scanned bytes (a ×K codebook fan-out, a re-delivery union):
-    * the caller states the multiple, the count still derives from the
-    * measured input and still clamps to the session's configured
-    * parallelism. */
+    * of the scanned bytes (a ×K codebook fan-out, a re-delivery union);
+    * the count still derives from the measured input and still clamps. */
   private[graft] def scaleParts(spark: SparkSession, df: DataFrame,
       expand: Double): Int = {
-    // An unreadable/unparsable session conf returns the SENTINEL (≤ 0)
-    // instead of assuming 200 (ADVICE r17: a fabricated 200 could exceed
-    // the deployment's real parallelism, violating the "never exceed what
-    // the deployment asked for" clamp contract) — withShufflePartitions
-    // treats the sentinel as "leave the session conf alone". Catches are
-    // NonFatal so a genuine VM error propagates.
+    // An unreadable session conf returns the sentinel (≤ 0), never a
+    // guessed count that could exceed the deployment's parallelism;
+    // NonFatal so a VM error propagates.
     import scala.util.control.NonFatal
     val sessionParts =
       try spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -311,8 +281,8 @@ object MemoFrames {
   /** Sum of the optimizer-estimated LEAF sizes of `df`'s plan (file bytes
     * for parquet scans; a double-scanned table weighs twice) — the same
     * measure scaleParts derives partition counts from, exposed for
-    * callers with their own sizing formulas (round 18: the graph arc
-    * table's bucket count). −1 when stats are unavailable. */
+    * callers with their own sizing formulas (the graph arc table's
+    * bucket count). −1 when stats are unavailable. */
   private[graft] def leafBytes(df: DataFrame): BigInt = {
     import scala.util.control.NonFatal
     try df.queryExecution.optimizedPlan.collectLeaves()
@@ -320,81 +290,38 @@ object MemoFrames {
     catch { case NonFatal(_) => BigInt(-1) }
   }
 
-  /** Run `body` (actions included) with AQE disabled on `spark`, restoring
-    * the previous setting after. Also used by iterative trainers whose
-    * per-iteration collects are fixed-shape (llm_ann_ivf's Lloyd steps):
-    * same job-count arithmetic as the memo writes.
-    *
-    * Serialized on the SAME monitor as `frame`/`materialize` (ADVICE r8):
-    * the toggle mutates the session-global AQE conf, so two threads
-    * interleaving set/restore could strand the session with AQE off (or
-    * flip it mid-plan for an unrelated query). `synchronized` is
-    * reentrant, so `frame`'s internal writeNoAqe and a caller-level
-    * noAqe wrapping a body that itself memoizes both still work. */
-  private[graft] def noAqe[T](spark: SparkSession)(body: => T): T = synchronized {
-    val conf = spark.conf
-    val k = "spark.sql.adaptive.enabled"
-    val prev = conf.getOption(k)
-    conf.set(k, "false")
-    try body
-    finally prev match {
-      case Some(v) => conf.set(k, v)
-      case None    => conf.unset(k)
-    }
-  }
-
-  /** Run `body` (actions included) with spark.sql.shuffle.partitions
-    * scoped to `n`, restoring after — for DOMAIN-BOUNDED frames (day
-    * grain, segment grain) whose exchanges otherwise fan every one of a
-    * multi-level plan's shuffles into 32 mostly-empty tasks (round 12:
-    * ts_changepoint_deep's 9 day-grain exchanges = ~288 near-empty
-    * tasks per run). Values are partitioning-independent (§2.Z pins),
-    * so only task count changes. Same monitor as noAqe: the toggle
-    * mutates session-global conf. */
-  private[graft] def withShufflePartitions[T](spark: SparkSession, n: Int)(
+  /** Run `body` with each `kvs` entry set on the session conf, restoring
+    * every previous value (or its absence) after, however the body ends.
+    * The session conf is global to every query on the session, so the
+    * set/restore runs under the same monitor as `frame`/`materialize`:
+    * two threads interleaving it could strand a value. The monitor is
+    * reentrant, so a scoped body may itself memoize or scope again.
+    * The body holds the monitor for its whole run: keep it to planning
+    * and synchronous actions, never a streaming await (a stream copies
+    * the conf at `start()`, so only the start needs the scope). */
+  private[graft] def withConf[T](spark: SparkSession, kvs: (String, String)*)(
       body: => T): T = synchronized {
-    // n ≤ 0 is scaleParts' "conf unreadable" sentinel: run the body with
-    // the session conf untouched rather than install a fabricated count
-    if (n <= 0) return body
     val conf = spark.conf
-    val k = "spark.sql.shuffle.partitions"
-    val prev = conf.getOption(k)
-    conf.set(k, n.toString)
-    try body
-    finally prev match {
-      case Some(v) => conf.set(k, v)
-      case None    => conf.unset(k)
-    }
+    val prev = kvs.map { case (k, _) => k -> conf.getOption(k) }
+    try { kvs.foreach { case (k, v) => conf.set(k, v) }; body }
+    finally prev.foreach { case (k, p) => p.fold(conf.unset(k))(conf.set(k, _)) }
   }
 
-  /** `withShufflePartitions` for LONG-RUNNING bodies (ADVICE r17): the
-    * plain form holds the MemoFrames monitor for the whole body, which is
-    * wrong when the body is a streaming-query await — a micro-batch that
-    * touches MemoFrames (or any concurrent memo caller) would block on a
-    * lock held until the stream finishes, a deadlock in the worst case.
-    * This form takes the monitor only around the conf SET and the conf
-    * RESTORE; the body runs unlocked. The weaker guarantee — two
-    * concurrent SCOPED togglers could interleave set/restore — is
-    * acceptable exactly here because the suite starts streaming queries
-    * from the single driver thread, while memo/materialize calls issued
-    * DURING the stream (the original hazard) nest correctly: their own
-    * set/restore brackets are atomic under the monitor and restore to the
-    * streaming value. */
-  private[graft] def withShufflePartitionsScoped[T](spark: SparkSession,
-      n: Int)(body: => T): T = {
-    if (n <= 0) return body
-    val k = "spark.sql.shuffle.partitions"
-    val prev = synchronized {
-      val p = spark.conf.getOption(k)
-      spark.conf.set(k, n.toString)
-      p
-    }
-    try body
-    finally synchronized {
-      prev match {
-        case Some(v) => spark.conf.set(k, v)
-        case None    => spark.conf.unset(k)
-      }
-    }
-  }
+  /** `body` with AQE off: fixed-shape builds and iterative trainers fold
+    * each action into one job (same job-count arithmetic as writeNoAqe). */
+  private[graft] def noAqe[T](spark: SparkSession)(body: => T): T =
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false")(body)
+
+  /** The shuffle-partition conf entry for `n`, or none for n ≤ 0 —
+    * scaleParts' "conf unreadable" sentinel leaves the session conf
+    * alone rather than install a fabricated count. */
+  private[graft] def shufflePartitionsConf(n: Int): Seq[(String, String)] =
+    if (n > 0) Seq("spark.sql.shuffle.partitions" -> n.toString) else Nil
+
+  /** `body` at `n` shuffle partitions (n ≤ 0: unchanged), for frames
+    * whose exchanges carry domain-bounded data. Values are
+    * partitioning-independent (§2.Z pins), so only task count changes. */
+  private[graft] def withShufflePartitions[T](spark: SparkSession, n: Int)(
+      body: => T): T =
+    withConf(spark, shufflePartitionsConf(n): _*)(body)
 }

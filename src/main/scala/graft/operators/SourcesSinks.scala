@@ -528,6 +528,14 @@ object SourcesSinks {
     "scan_dsv2"        -> (scanDsv2 _),
     "sink_idempotent"  -> (sinkIdempotent _))
 
+  private val ingestOracle =
+    """SELECT l_returnflag AS flag, count(*) AS n,
+      | round(sum(round(l_quantity, 2)), 2) AS sum_qty,
+      | round(sum(round(l_extendedprice, 2)), 2) AS sum_price,
+      | strftime(min(l_shipdate), '%Y-%m-%d %H:%M:%S') AS first_ship,
+      | strftime(max(l_shipdate), '%Y-%m-%d %H:%M:%S') AS last_ship
+      |FROM lineitem GROUP BY flag ORDER BY flag ASC""".stripMargin
+
   val oracleSql: Map[String, String] = Map(
     "sink_zorder" ->
       """SELECT l_returnflag, count(*) AS n,
@@ -580,20 +588,8 @@ object SourcesSinks {
         |UNION ALL SELECT 'documents', count(*), min(doc_id), max(doc_id) FROM documents
         |UNION ALL SELECT 'embeddings', count(*), min(vec_id), max(vec_id) FROM embeddings
         |ORDER BY tbl ASC""".stripMargin,
-    "ingest_csv" ->
-      """SELECT l_returnflag AS flag, count(*) AS n,
-        | round(sum(round(l_quantity, 2)), 2) AS sum_qty,
-        | round(sum(round(l_extendedprice, 2)), 2) AS sum_price,
-        | strftime(min(l_shipdate), '%Y-%m-%d %H:%M:%S') AS first_ship,
-        | strftime(max(l_shipdate), '%Y-%m-%d %H:%M:%S') AS last_ship
-        |FROM lineitem GROUP BY flag ORDER BY flag ASC""".stripMargin,
-    "ingest_json" ->
-      """SELECT l_returnflag AS flag, count(*) AS n,
-        | round(sum(round(l_quantity, 2)), 2) AS sum_qty,
-        | round(sum(round(l_extendedprice, 2)), 2) AS sum_price,
-        | strftime(min(l_shipdate), '%Y-%m-%d %H:%M:%S') AS first_ship,
-        | strftime(max(l_shipdate), '%Y-%m-%d %H:%M:%S') AS last_ship
-        |FROM lineitem GROUP BY flag ORDER BY flag ASC""".stripMargin,
+    "ingest_csv" -> ingestOracle,
+    "ingest_json" -> ingestOracle,
     "scan_pruned" ->
       """SELECT o_orderpriority, count(*) AS n, round(sum(o_totalprice), 2) AS rev
         |FROM orders WHERE strftime(o_orderdate, '%Y-%m') = '1996-03'

@@ -82,6 +82,6 @@ class LlmPipelineE2eSpec extends AnyFunSuite {
         .json(s"${operators.SourcesSinks.scratchFor(tmp.toString, "llm_e2e")}/jsonl")
         .select("text").distinct().collect().map(_.getString(0)).sorted.toSeq
       assert(stagedTexts === Seq(t1, t2).sorted)
-    } finally operators.Streaming.deleteStaging(tmp.toString)
+    } finally operators.ScratchDirs.deleteRecursively(tmp)
   }
 }

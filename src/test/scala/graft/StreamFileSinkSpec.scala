@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** Exactly-once parquet file sink (round 15): the declared
+/** Exactly-once parquet file sink: the declared
   * `stream_file_sink` query is oracled against the batch census; this
   * suite additionally proves the MANIFEST mechanism the oracle equality
   * rides on — a query killed mid-backlog and resumed on the same
@@ -29,12 +29,8 @@ class StreamFileSinkSpec extends AnyFunSuite {
 
   test("kill mid-backlog + resume on one checkpoint: manifest read-back is exactly-once") {
     val (src, schema) = operators.Streaming.incrStage(spark, sf0001)
-    // stage under the swept io base via the sanctioned helper (ADVICE
-    // r15): the default java.io.tmpdir location sits outside every 2 h
-    // stale sweep, so an assertion failure before the best-effort rm
-    // leaked the full parquet copy + checkpoint permanently; here a
-    // crashed run's dir is reaped
-    val tmp = operators.Streaming.ioTempDir("graft_fsink_kill_")
+    // staged under the swept io root, so a crashed run's dir is reaped
+    val tmp = operators.ScratchDirs.tempDir("graft_fsink_kill_")
     val out = s"$tmp/out"
     def start() = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1") // one day per micro-batch → a long backlog
@@ -45,8 +41,6 @@ class StreamFileSinkSpec extends AnyFunSuite {
       .option("checkpointLocation", s"$tmp/ckpt")
       .outputMode("append")
       .trigger(Trigger.AvailableNow()).start()
-    // cleanup runs in the finally (ADVICE r15): the rm used to follow the
-    // assertions, so any failure leaked the dir for the sweep to reap
     try {
       val q1 = start()
       // kill as soon as at least one batch committed (and, on the fixture's
@@ -70,6 +64,6 @@ class StreamFileSinkSpec extends AnyFunSuite {
       assert(got === batchCensus(),
         s"manifest read-back diverges from batch after a mid-backlog kill " +
           s"(life 1 committed $life1Batches batch(es) before the stop)")
-    } finally operators.Streaming.deleteStaging(tmp)
+    } finally operators.ScratchDirs.deleteRecursively(tmp)
   }
 }

@@ -4,12 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** Streaming → warehouse exactly-once (round 16, VERDICT r15 task 4):
-  * the declared `stream_jdbc_sink` query is oracled against the batch
-  * census; this suite additionally proves the BATCH-ID IDEMPOTENCE the
-  * oracle equality rides on — a query killed mid-backlog and resumed on
-  * the same checkpoint re-offers a batch id to foreachBatch, and the
-  * delete-and-insert transaction replaces rather than double-counts it.
+/** Streaming → warehouse exactly-once: the declared `stream_jdbc_sink`
+  * query is oracled against the batch census; this suite additionally
+  * proves the BATCH-ID IDEMPOTENCE the oracle equality rides on — a query
+  * killed mid-backlog and resumed on the same checkpoint re-offers a batch
+  * id to foreachBatch, and the delete-and-insert transaction replaces
+  * rather than double-counts it.
   */
 class StreamJdbcSinkSpec extends AnyFunSuite {
   import TestSpark._
@@ -29,7 +29,6 @@ class StreamJdbcSinkSpec extends AnyFunSuite {
   test("replayed batch id is replaced, not double-counted (the idempotence primitive)") {
     val url = operators.JdbcSink.jdbcUrl
     val table = "stream_load_replay"
-    operators.Streaming.ensureLoadTable(url, table)
     operators.Streaming.resetLoadTable(url, table)
     val mk = (day: String, n: Long, s: Double) =>
       org.apache.spark.sql.Row(day, "click", n, s)
@@ -40,9 +39,7 @@ class StreamJdbcSinkSpec extends AnyFunSuite {
       Array(mk("1995-01-01", 12L, 2.0), mk("1995-01-02", 3L, 0.5)))
     // a different batch id lands beside it untouched
     operators.Streaming.landBatch(url, table, 8L, Array(mk("1995-01-01", 5L, 1.0)))
-    val got = spark.read.format("jdbc")
-      .option("url", url).option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-      .option("dbtable", table).load()
+    val got = operators.JdbcSink.read(spark, table)
       .groupBy("day").agg(sum("n").as("n"), round(sum("s"), 2).as("s"))
       .orderBy(col("day").asc)
       .collect().map(_.toSeq).toSeq
@@ -53,9 +50,8 @@ class StreamJdbcSinkSpec extends AnyFunSuite {
     val (src, schema) = operators.Streaming.incrStage(spark, sf0001)
     val url = operators.JdbcSink.jdbcUrl
     val table = "stream_load_kill"
-    operators.Streaming.ensureLoadTable(url, table)
     operators.Streaming.resetLoadTable(url, table)
-    val tmp = operators.Streaming.ioTempDir("graft_jsink_kill_")
+    val tmp = operators.ScratchDirs.tempDir("graft_jsink_kill_")
     try {
       def start() = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1") // one day per micro-batch → a long backlog
@@ -78,9 +74,7 @@ class StreamJdbcSinkSpec extends AnyFunSuite {
       q1.stop()
       val q2 = start() // second life, same checkpoint: must resume, not replay-and-double
       try { assert(q2.awaitTermination(120000)) } finally q2.stop()
-      val got = spark.read.format("jdbc")
-        .option("url", url).option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-        .option("dbtable", table).load()
+      val got = operators.JdbcSink.read(spark, table)
         .groupBy(col("day"), col("event_type"))
         .agg(sum("n").as("n"), round(sum("s"), 2).as("val"))
         .orderBy(col("day").asc, col("event_type").asc)
@@ -88,6 +82,6 @@ class StreamJdbcSinkSpec extends AnyFunSuite {
       assert(got === batchCensus(),
         s"warehouse diverges from batch after a mid-backlog kill " +
           s"(life 1 landed $life1Batches batch(es) before the stop)")
-    } finally operators.Streaming.deleteStaging(tmp)
+    } finally operators.ScratchDirs.deleteRecursively(tmp)
   }
 }
