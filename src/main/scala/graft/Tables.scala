@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * Every `SparkEntry.queries` value re-reads from `sfDir` through these
   * helpers, so one session can be pointed at any scale factor. Tables are
   * plain parquet scans — Catalyst pushes filters/projections into the
-  * vectorized reader, so there is deliberately NO caching here (each query
-  * should read only the columns/row-groups it needs; see SURVEY §4.2).
+  * vectorized reader, so no data is cached here (each query should read
+  * only the columns/row-groups it needs; see SURVEY §4.2). The one thing
+  * kept is each path's schema (`schemaCache`).
   */
 object Tables {
 
@@ -77,8 +78,23 @@ object Tables {
     case other    => read(spark, dir, other)
   }
 
-  /** Register all tables as temp views for SQL-form queries (grouping sets,
-    * offset pagination, …). Idempotent per session. */
+  /** Register all ten tables of `dir` as temp views under their own names.
+    * Every call re-creates all ten views (one analysed plan each), so the
+    * last call decides which `dir` the names read. */
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach(n => byName(spark, dir, n).createOrReplaceTempView(n))
+
+  /** A SQL-form query: register the views of `dir`, then run `text` over
+    * them. The DuckDB oracle reads plain table names over the same parquet
+    * files, so the text can serve as the query's oracle too. This is the
+    * only caller of `registerAll` in the main sources. A case class, not a
+    * closure, so that SparkEntryContractSpec can read the text back. */
+  final case class Sql(text: String) extends ((SparkSession, String) => DataFrame) {
+    def apply(spark: SparkSession, dir: String): DataFrame = {
+      registerAll(spark, dir)
+      spark.sql(text)
+    }
+  }
+
+  def sql(text: String): Sql = Sql(text)
 }

@@ -83,39 +83,6 @@ object Aggregates {
       .agg(approx_count_distinct(col("user_id"), 0.05).as("approx_users"))
       .orderBy("event_type")
 
-  /** GROUPING SETS ((nation),(priority),()) with coalesce'd 'ALL' markers —
-    * the validated formulation that sidesteps NULL-ordering divergence
-    * (SURVEY §2.D agg_rollup note). SQL-form: identical text runs on both
-    * engines. */
-  def aggGroupingSets(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(
-      """SELECT coalesce(n_name, 'ALL') AS nation,
-        |       coalesce(o_orderpriority, 'ALL') AS priority,
-        |       count(*) AS n, round(sum(o_totalprice), 2) AS revenue
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY GROUPING SETS ((n_name), (o_orderpriority), ())
-        |ORDER BY nation, priority""".stripMargin)
-  }
-
-  /** SQL-form ROLLUP: the post-rollup coalesce over a multi-join trips
-    * Spark's ambiguous-self-join detection in the DF API, and the SQL text
-    * is shared verbatim with the oracle anyway. */
-  def aggRollup(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(
-      """SELECT coalesce(n_name, 'ALL') AS nation,
-        |       coalesce(o_orderpriority, 'ALL') AS priority,
-        |       count(*) AS n, round(sum(o_totalprice), 2) AS revenue
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY ROLLUP (n_name, o_orderpriority)
-        |ORDER BY nation, priority""".stripMargin)
-  }
-
   def aggCube(spark: SparkSession, dir: String): DataFrame =
     Tables.lineitem(spark, dir)
       .cube("l_returnflag", "l_linestatus")
@@ -384,25 +351,6 @@ object Aggregates {
       .orderBy(col("l_returnflag").asc)
   }
 
-  /** Discrete percentiles (SQL-standard PERCENTILE_DISC / WITHIN GROUP):
-    * the smallest ACTUAL value with cumulative fraction ≥ p — unlike
-    * agg_percentiles' interpolated quantile_cont, the result is always a
-    * real data point, so cross-engine agreement is EXACT (no
-    * interpolation arithmetic to diverge). The at-scale caveat matches
-    * agg_percentiles': exact quantiles need a per-group sort; sketches
-    * (agg_approx_pctl) are the 100 TB path. */
-  def aggPercentileDisc(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(
-      """SELECT o_orderpriority,
-        |  percentile_disc(0.25) WITHIN GROUP (ORDER BY o_totalprice) AS p25,
-        |  percentile_disc(0.5) WITHIN GROUP (ORDER BY o_totalprice) AS p50,
-        |  percentile_disc(0.9) WITHIN GROUP (ORDER BY o_totalprice) AS p90,
-        |  count(*) AS n
-        |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority ASC""".stripMargin)
-  }
-
   /** Linear-regression aggregate family (regr_*): price-vs-quantity fit
     * per return flag. Same single-pass merged-moment machinery as
     * agg_stats (partial aggregation composes the (n, Σx, Σy, Σxx, Σxy)
@@ -426,9 +374,7 @@ object Aggregates {
     * a per-group sort; the at-scale variant is `approx_percentile`
     * (t-digest/GK sketch), declared no-oracle like the other sketches if
     * ever needed cross-engine. */
-  def aggPercentiles(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(
+  val aggPercentiles: Tables.Sql = Tables.sql(
       """SELECT o_orderpriority,
         | round(percentile(o_totalprice, 0.25), 6) AS p25,
         | round(percentile(o_totalprice, 0.5), 6) AS p50,
@@ -437,7 +383,6 @@ object Aggregates {
         | count(*) AS n
         |FROM orders GROUP BY o_orderpriority
         |ORDER BY o_orderpriority ASC""".stripMargin)
-  }
 
   /** Approximate percentiles (Greenwald-Khanna sketch, accuracy 1000):
     * the 100 TB percentile path — mergeable partials instead of a
@@ -1116,6 +1061,49 @@ object Aggregates {
             * sqrt((col("n0") - col("ties_y")).cast("double"))), 6).as("tau_b"))
   }
 
+  /** Query id → SQL text. Spark runs each text through `Tables.sql`, and
+    * the same text is its DuckDB oracle. */
+  private val sql: Map[String, String] = Map(
+    // GROUPING SETS ((nation),(priority),()) with coalesce'd 'ALL' markers —
+    // the validated formulation that sidesteps NULL-ordering divergence
+    // (SURVEY §2.D agg_rollup note).
+    "agg_grouping_sets" ->
+      """SELECT coalesce(n_name, 'ALL') AS nation,
+        |       coalesce(o_orderpriority, 'ALL') AS priority,
+        |       count(*) AS n, round(sum(o_totalprice), 2) AS revenue
+        |FROM orders
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY GROUPING SETS ((n_name), (o_orderpriority), ())
+        |ORDER BY nation, priority""".stripMargin,
+    // SQL-form ROLLUP: the post-rollup coalesce over a multi-join trips
+    // Spark's ambiguous-self-join detection in the DF API.
+    "agg_rollup" ->
+      """SELECT coalesce(n_name, 'ALL') AS nation,
+        |       coalesce(o_orderpriority, 'ALL') AS priority,
+        |       count(*) AS n, round(sum(o_totalprice), 2) AS revenue
+        |FROM orders
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY ROLLUP (n_name, o_orderpriority)
+        |ORDER BY nation, priority""".stripMargin,
+    // Discrete percentiles (SQL-standard PERCENTILE_DISC / WITHIN GROUP):
+    // the smallest ACTUAL value with cumulative fraction ≥ p — unlike
+    // agg_percentiles' interpolated quantile_cont, the result is always a
+    // real data point, so cross-engine agreement is EXACT (no
+    // interpolation arithmetic to diverge). The at-scale caveat matches
+    // agg_percentiles': exact quantiles need a per-group sort; sketches
+    // (agg_approx_pctl) are the 100 TB path. DuckDB reads the same
+    // `percentile_disc(p) WITHIN GROUP (ORDER BY x)` spelling.
+    "agg_percentile_disc" ->
+      """SELECT o_orderpriority,
+        |  percentile_disc(0.25) WITHIN GROUP (ORDER BY o_totalprice) AS p25,
+        |  percentile_disc(0.5) WITHIN GROUP (ORDER BY o_totalprice) AS p50,
+        |  percentile_disc(0.9) WITHIN GROUP (ORDER BY o_totalprice) AS p90,
+        |  count(*) AS n
+        |FROM orders GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority ASC""".stripMargin)
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "agg_spearman"      -> (aggSpearman _),
     "agg_kendall"       -> (aggKendall _),
@@ -1137,8 +1125,7 @@ object Aggregates {
     "agg_stats"         -> (aggStats _),
     "agg_regression"    -> (aggRegression _),
     "agg_typed_geomean" -> (aggTypedGeomean _),
-    "agg_percentile_disc" -> (aggPercentileDisc _),
-    "agg_percentiles"   -> (aggPercentiles _),
+    "agg_percentiles"   -> aggPercentiles,
     "agg_kmv_distinct"  -> (aggKmvDistinct _),
     "agg_theta_union"   -> (aggThetaUnion _),
     "agg_quantile_union" -> (aggQuantileUnion _),
@@ -1148,15 +1135,13 @@ object Aggregates {
     "agg_distinct"      -> (aggDistinct _),
     "agg_approx_hll"    -> (aggApproxHll _),
     "agg_hll_union"     -> (aggHllUnion _),
-    "agg_grouping_sets" -> (aggGroupingSets _),
-    "agg_rollup"        -> (aggRollup _),
     "agg_cube"          -> (aggCube _),
     "agg_having"        -> (aggHaving _),
     "agg_filtered"      -> (aggFiltered _),
     "agg_collect"       -> (aggCollect _),
-    "agg_minmax_by"     -> (aggMinmaxBy _))
+    "agg_minmax_by"     -> (aggMinmaxBy _)) ++ sql.view.mapValues(Tables.sql)
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = sql ++ Map(
     "agg_spearman" ->
       """WITH cust AS (
         |  SELECT o_custkey, count(*) AS x,
@@ -1458,14 +1443,6 @@ object Aggregates {
         |  FROM c)
         |SELECT o_custkey, o_orderpriority AS mode_prio, cnt
         |FROM r WHERE rn = 1 ORDER BY o_custkey ASC""".stripMargin,
-    "agg_percentile_disc" ->
-      """SELECT o_orderpriority,
-        |  quantile_disc(o_totalprice, 0.25) AS p25,
-        |  quantile_disc(o_totalprice, 0.5) AS p50,
-        |  quantile_disc(o_totalprice, 0.9) AS p90,
-        |  count(*) AS n
-        |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority ASC""".stripMargin,
     "agg_typed_geomean" ->
       """SELECT l_returnflag,
         | round(exp(avg(ln(CASE WHEN l_extendedprice > 0 AND NOT isnan(l_extendedprice)
@@ -1514,18 +1491,6 @@ object Aggregates {
     "agg_distinct" ->
       """SELECT event_type, count(DISTINCT user_id) AS users, count(*) AS n
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "agg_grouping_sets" ->
-      """SELECT coalesce(n_name,'ALL') AS nation, coalesce(o_orderpriority,'ALL') AS priority,
-        | count(*) AS n, round(sum(o_totalprice),2) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY GROUPING SETS ((n_name),(o_orderpriority),())
-        |ORDER BY nation, priority""".stripMargin,
-    "agg_rollup" ->
-      """SELECT coalesce(n_name,'ALL') AS nation, coalesce(o_orderpriority,'ALL') AS priority,
-        | count(*) AS n, round(sum(o_totalprice),2) AS revenue
-        |FROM orders JOIN customer ON o_custkey = c_custkey JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY ROLLUP (n_name, o_orderpriority)
-        |ORDER BY nation, priority""".stripMargin,
     "agg_cube" ->
       """SELECT coalesce(l_returnflag,'ALL') AS returnflag, coalesce(l_linestatus,'ALL') AS linestatus,
         | count(*) AS n, round(sum(l_quantity),2) AS sum_qty

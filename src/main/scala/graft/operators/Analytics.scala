@@ -153,38 +153,12 @@ object Analytics {
       .orderBy(col("bucket").asc)
   }
 
-  /** The original nine-percentile_disc formulation — retained ONLY as the
-    * reference implementation EqdepthSemanticsSpec compares against (it is
-    * also verbatim the DuckDB oracle text). Not a declared query: its nine
+  /** The nine-percentile_disc formulation: `hist_eqdepth`'s oracle text,
+    * run by Spark. Only EqdepthSemanticsSpec calls it, as the reference
+    * histEqdepth must match. It is not a declared query: its nine
     * single-reducer value buffers are exactly what histEqdepth replaces. */
-  private[graft] def histEqdepthDisc(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(
-      """WITH c AS (
-        |  SELECT
-        |    percentile_disc(0.1) WITHIN GROUP (ORDER BY o_totalprice) AS c1,
-        |    percentile_disc(0.2) WITHIN GROUP (ORDER BY o_totalprice) AS c2,
-        |    percentile_disc(0.3) WITHIN GROUP (ORDER BY o_totalprice) AS c3,
-        |    percentile_disc(0.4) WITHIN GROUP (ORDER BY o_totalprice) AS c4,
-        |    percentile_disc(0.5) WITHIN GROUP (ORDER BY o_totalprice) AS c5,
-        |    percentile_disc(0.6) WITHIN GROUP (ORDER BY o_totalprice) AS c6,
-        |    percentile_disc(0.7) WITHIN GROUP (ORDER BY o_totalprice) AS c7,
-        |    percentile_disc(0.8) WITHIN GROUP (ORDER BY o_totalprice) AS c8,
-        |    percentile_disc(0.9) WITHIN GROUP (ORDER BY o_totalprice) AS c9
-        |  FROM orders),
-        |b AS (
-        |  SELECT o_totalprice,
-        |    CAST(o_totalprice > c1 AS INT) + CAST(o_totalprice > c2 AS INT) +
-        |    CAST(o_totalprice > c3 AS INT) + CAST(o_totalprice > c4 AS INT) +
-        |    CAST(o_totalprice > c5 AS INT) + CAST(o_totalprice > c6 AS INT) +
-        |    CAST(o_totalprice > c7 AS INT) + CAST(o_totalprice > c8 AS INT) +
-        |    CAST(o_totalprice > c9 AS INT) AS bucket
-        |  FROM orders CROSS JOIN c)
-        |SELECT bucket, count(*) AS n,
-        |  round(min(o_totalprice), 2) AS lo_seen,
-        |  round(max(o_totalprice), 2) AS hi_seen
-        |FROM b GROUP BY bucket ORDER BY bucket ASC""".stripMargin)
-  }
+  private[graft] def histEqdepthDisc(spark: SparkSession, dir: String): DataFrame =
+    Tables.sql(oracleSql("hist_eqdepth"))(spark, dir)
 
   /** Batch sessionization (round-7 addendum) under the STRICT-gap
     * definition: a new session starts when the inactivity gap EXCEEDS

@@ -5,11 +5,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Billing-domain operators (round-8 wave 21) — the reference system is a
-  * billing data loader, and these are the three calculations every
-  * billing pipeline ships beyond generic OLAP: tiered rating, receivables
-  * aging, and period proration. All map-side arithmetic + one hash agg,
-  * the shape that rates a 100 TB usage stream in a single pass.
+/** Billing-domain operators — the reference system is a billing data
+  * loader. These are the calculations a billing pipeline ships beyond
+  * generic OLAP (tiered rating, receivables aging, period proration,
+  * revenue movement and recognition, DSO, a unit-value price index) plus
+  * the loader's own dataflow as one query (`bill_pipeline_e2e`). The
+  * rating calculations are map-side arithmetic + one hash agg, the shape
+  * that rates a 100 TB usage stream in a single pass.
   *
   * Determinism: tier boundaries and rates are exact literals; proration
   * ratios divide exact small integers (identical doubles both engines);
@@ -116,7 +118,7 @@ object Billing {
       .orderBy(col("month").asc)
   }
 
-  /** Straight-line revenue recognition (round-9) — each order's charge is
+  /** Straight-line revenue recognition — each order's charge is
     * deferred and recognized in three equal monthly tranches starting at
     * its order month: the accrual-accounting schedule (ASC 606-style
     * ratable recognition) that turns billed bookings into a recognized-
@@ -140,7 +142,7 @@ object Billing {
       .agg(count(lit(1)).as("n_active"), round(sum("rec"), 2).as("recognized"))
       .orderBy(col("month").asc)
 
-  /** Days Sales Outstanding (round-9 wave 3) — per order month: billed
+  /** Days Sales Outstanding — per order month: billed
     * revenue, still-open A/R, and DSO = open_ar / (billed / days-in-
     * month): the collections-velocity KPI next to bill_aging's bucket
     * snapshot (aging says WHERE the exposure sits, DSO says how fast
@@ -159,7 +161,7 @@ object Billing {
         round(col("open_ar") / (col("billed") / col("dim")), 4).as("dso_days"))
       .orderBy(col("month").asc)
 
-  /** Unit-value price index (round-9 wave 7) — per ship year: the
+  /** Unit-value price index — per ship year: the
     * unit value (revenue per unit shipped) and its index vs the base
     * (first) year, with the year-over-year change: the price-level
     * trend a billing analyst reads before attributing revenue motion
@@ -198,16 +200,15 @@ object Billing {
       .orderBy(col("yr").asc)
   }
 
-  /** The reference's OWN dataflow as ONE composed declared query (round
-    * 16, VERDICT r15 task 2): every stage of the [inferred] billing-loader
-    * loop — `fetch CSV → normalize → dedupe → partitioned idempotent
-    * insert → verify` (SURVEY §3.1) — has passed individually since the
-    * early rounds (`ingest_csv`, `proj_derive`, `llm_dedup_exact`/
-    * `stream_dedup`, `sink_idempotent`), but a per-stage bug that only
-    * manifests ACROSS the seams (schema drift between normalize and the
-    * sink, a dedup key that doesn't survive the text round-trip, a
-    * partition column derived differently than the re-delivery filter)
-    * had no oracle row. This query runs the composition end-to-end:
+  /** The reference's OWN dataflow as ONE composed declared query: the
+    * [inferred] billing-loader loop — `fetch CSV → normalize → dedupe →
+    * partitioned idempotent insert → verify` (SURVEY §3.1). Each stage
+    * also has its own query (`ingest_csv`, `proj_derive`,
+    * `llm_dedup_exact`/`stream_dedup`, `sink_idempotent`); this one gives
+    * an oracle row to a bug that only shows ACROSS the seams (schema
+    * drift between normalize and the sink, a dedup key that doesn't
+    * survive the text round-trip, a partition column derived differently
+    * than the re-delivery filter). It runs the composition end-to-end:
     *
     *  1. INGEST — the upstream drop is the text-format-safe lineitem
     *     projection staged as CSV **with a 10% duplicate re-delivery**
@@ -259,8 +260,8 @@ object Billing {
       StructField("flag", StringType), StructField("qty", DoubleType),
       StructField("price", DoubleType), StructField("ship", StringType)))
     // normalize + dedup as a function of the delivered frame, so the
-    // re-delivery below can apply its month predicate AT THE SOURCE
-    // (round 17, guide §2.3 — filter before the shuffle): the month is a
+    // re-delivery below can apply its month predicate AT THE SOURCE,
+    // before the shuffle: the month is a
     // pure per-record function of `ship` and the dedup key is the FULL
     // record, so filter-then-dedup ≡ dedup-then-filter row for row, and
     // the re-delivery's dedup shuffle carries one month's rows instead
@@ -273,8 +274,8 @@ object Billing {
     val delivered = spark.read.schema(schema)
       .option("header", "true").csv(s"$out/csv")
     val clean = normalize(delivered)
-    // SIZE-DERIVED partition count for the dedup shuffle + landing write
-    // (round 17, guide §2): the staged drop's measured bytes (CSV text
+    // SIZE-DERIVED partition count for the dedup shuffle + landing write:
+    // the staged drop's measured bytes (CSV text
     // ≈ its in-flight row width) decide how many tasks the dedup exchange
     // and the month-colocating repartition get, clamped to the session
     // conf — at 10×/100× the count rises back to the configured value.

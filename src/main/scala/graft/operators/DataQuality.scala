@@ -246,45 +246,6 @@ object DataQuality {
         col("t1").as("n_urgent"), col("t2").as("n_other"))
   }
 
-  /** IQR-fence outlier screen (round-8 addendum) — Tukey's boxplot rule
-    * per nation over PER-CUSTOMER revenue: customers outside
-    * [q1 − 1.5·IQR, q3 + 1.5·IQR] are the anomalous accounts a billing
-    * audit surfaces (the raw order-price column is near-uniform and
-    * fence-free by construction — per-customer totals have the heavy
-    * tail the rule exists for; ~1% trip it). Quartiles are
-    * `percentile_disc` — ACTUAL data values picked by rank, exact in
-    * both engines (§2.Z agg_percentile_disc precedent) — over the 2dp
-    * pre-rounded revenue, so fences are deterministic arithmetic.
-    *
-    * SQL-form query (WITHIN GROUP has no DataFrame equivalent). Scale:
-    * the corpus pass is the customer-grain revenue agg; quartiles sort
-    * per-nation frames of customer grain; the fence check re-joins the
-    * same frame — two vocabulary-to-customer-scale passes after the one
-    * corpus collapse. */
-  def dqOutlierIqr(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(
-      """WITH rev AS (
-        |  SELECT n.n_name, o.o_custkey, round(sum(o.o_totalprice), 2) AS rev
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |  GROUP BY n.n_name, o.o_custkey),
-        |q AS (
-        |  SELECT n_name,
-        |    percentile_disc(0.25) WITHIN GROUP (ORDER BY rev) AS q1,
-        |    percentile_disc(0.75) WITHIN GROUP (ORDER BY rev) AS q3
-        |  FROM rev GROUP BY n_name)
-        |SELECT r.n_name, count(*) AS n_cust,
-        |  round(q.q1, 2) AS q1, round(q.q3, 2) AS q3,
-        |  count(CASE WHEN r.rev < q.q1 - 1.5 * (q.q3 - q.q1)
-        |               OR r.rev > q.q3 + 1.5 * (q.q3 - q.q1) THEN 1 END) AS n_outliers,
-        |  round(max(CASE WHEN r.rev > q.q3 + 1.5 * (q.q3 - q.q1)
-        |                 THEN r.rev END), 2) AS max_outlier
-        |FROM rev r JOIN q ON r.n_name = q.n_name
-        |GROUP BY r.n_name, q.q1, q.q3
-        |ORDER BY r.n_name ASC""".stripMargin)
-  }
-
   /** Snapshot diff (round-8 addendum) — the reconciliation report a
     * warehouse runs between two loads of the same table: rows added,
     * removed, changed, unchanged, by FULL OUTER join on the business
@@ -629,6 +590,45 @@ object DataQuality {
       .orderBy(col("t").asc)
   }
 
+  /** Query id → SQL text. Spark runs each text through `Tables.sql`, and
+    * the same text is its DuckDB oracle. */
+  private val sql: Map[String, String] = Map(
+    // IQR-fence outlier screen — Tukey's boxplot rule
+    // per nation over PER-CUSTOMER revenue: customers outside
+    // [q1 − 1.5·IQR, q3 + 1.5·IQR] are the anomalous accounts a billing
+    // audit surfaces (the raw order-price column is near-uniform and
+    // fence-free by construction — per-customer totals have the heavy
+    // tail the rule exists for; ~1% trip it). Quartiles are
+    // `percentile_disc` — ACTUAL data values picked by rank, exact in
+    // both engines (§2.Z agg_percentile_disc precedent) — over the 2dp
+    // pre-rounded revenue, so fences are deterministic arithmetic.
+    //
+    // SQL-form (WITHIN GROUP has no DataFrame equivalent). Scale:
+    // the corpus pass is the customer-grain revenue agg; quartiles sort
+    // per-nation frames of customer grain; the fence check re-joins the
+    // same frame — two vocabulary-to-customer-scale passes after the one
+    // corpus collapse.
+    "dq_outlier_iqr" ->
+      """WITH rev AS (
+        |  SELECT n.n_name, o.o_custkey, round(sum(o.o_totalprice), 2) AS rev
+        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+        |  JOIN nation n ON c.c_nationkey = n.n_nationkey
+        |  GROUP BY n.n_name, o.o_custkey),
+        |q AS (
+        |  SELECT n_name,
+        |    percentile_disc(0.25) WITHIN GROUP (ORDER BY rev) AS q1,
+        |    percentile_disc(0.75) WITHIN GROUP (ORDER BY rev) AS q3
+        |  FROM rev GROUP BY n_name)
+        |SELECT r.n_name, count(*) AS n_cust,
+        |  round(q.q1, 2) AS q1, round(q.q3, 2) AS q3,
+        |  count(CASE WHEN r.rev < q.q1 - 1.5 * (q.q3 - q.q1)
+        |               OR r.rev > q.q3 + 1.5 * (q.q3 - q.q1) THEN 1 END) AS n_outliers,
+        |  round(max(CASE WHEN r.rev > q.q3 + 1.5 * (q.q3 - q.q1)
+        |                 THEN r.rev END), 2) AS max_outlier
+        |FROM rev r JOIN q ON r.n_name = q.n_name
+        |GROUP BY r.n_name, q.q1, q.q3
+        |ORDER BY r.n_name ASC""".stripMargin)
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dq_k_anon"      -> (dqKAnon _),
     "dq_l_diversity" -> (dqLDiversity _),
@@ -639,16 +639,15 @@ object DataQuality {
     "dq_freshness" -> (dqFreshness _),
     "dq_corr_matrix" -> (dqCorrMatrix _),
     "dq_snapshot_diff" -> (dqSnapshotDiff _),
-    "dq_outlier_iqr" -> (dqOutlierIqr _),
     "dq_benford" -> (dqBenford _),
     "dq_drift_ks" -> (dqDriftKs _),
     "dq_fd_check" -> (dqFdCheck _),
     "dq_profile" -> (dqProfile _),
     "cdc_apply" -> (cdcApply _),
     "dq_checks" -> (dqChecks _),
-    "join_scd2" -> (joinScd2 _))
+    "join_scd2" -> (joinScd2 _)) ++ sql.view.mapValues(Tables.sql)
 
-  val oracleSql: Map[String, String] = Map(
+  val oracleSql: Map[String, String] = sql ++ Map(
     "dq_t_closeness" ->
       """WITH cs AS (
         |  SELECT c_nationkey,
@@ -843,26 +842,6 @@ object DataQuality {
         |  FROM j)
         |SELECT class, count(*) AS n, min(k) AS min_key, max(k) AS max_key
         |FROM c GROUP BY class ORDER BY class ASC""".stripMargin,
-    "dq_outlier_iqr" ->
-      """WITH rev AS (
-        |  SELECT n.n_name, o.o_custkey, round(sum(o.o_totalprice), 2) AS rev
-        |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |  GROUP BY n.n_name, o.o_custkey),
-        |q AS (
-        |  SELECT n_name,
-        |    quantile_disc(rev, 0.25) AS q1,
-        |    quantile_disc(rev, 0.75) AS q3
-        |  FROM rev GROUP BY n_name)
-        |SELECT r.n_name, count(*) AS n_cust,
-        |  round(q.q1, 2) AS q1, round(q.q3, 2) AS q3,
-        |  count(CASE WHEN r.rev < q.q1 - 1.5 * (q.q3 - q.q1)
-        |               OR r.rev > q.q3 + 1.5 * (q.q3 - q.q1) THEN 1 END) AS n_outliers,
-        |  round(max(CASE WHEN r.rev > q.q3 + 1.5 * (q.q3 - q.q1)
-        |                 THEN r.rev END), 2) AS max_outlier
-        |FROM rev r JOIN q ON r.n_name = q.n_name
-        |GROUP BY r.n_name, q.q1, q.q3
-        |ORDER BY r.n_name ASC""".stripMargin,
     "dq_benford" ->
       """WITH d AS (
         |  SELECT digit FROM (

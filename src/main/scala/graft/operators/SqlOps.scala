@@ -50,114 +50,55 @@ object SqlOps {
         round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
       .orderBy(col("l_returnflag").asc)
 
-  /** LATERAL join: top-2 orders per customer via a correlated lateral
-    * subquery (the SQL-standard form of the win_topk pattern). */
-  def joinLateral(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(
+  /** Query id → SQL text. Spark runs each text through `Tables.sql`, and
+    * the same text is its DuckDB oracle. */
+  private val sql: Map[String, String] = Map(
+    // LATERAL join: top-2 orders per customer via a correlated lateral
+    // subquery (the SQL-standard form of the win_topk pattern).
+    "join_lateral" ->
       """SELECT c_custkey, t.o_orderkey, t.o_totalprice
         |FROM customer,
         |LATERAL (SELECT o_orderkey, o_totalprice FROM orders
         |         WHERE o_custkey = c_custkey
         |         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 2) t
-        |ORDER BY c_custkey ASC, t.o_totalprice DESC, t.o_orderkey ASC""".stripMargin)
-  }
-
-  /** Correlated scalar subquery: orders 1.5× above their customer's
-    * average order value. */
-  def subqueryScalar(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(
+        |ORDER BY c_custkey ASC, t.o_totalprice DESC, t.o_orderkey ASC""".stripMargin,
+    // Correlated scalar subquery: orders 1.5× above their customer's
+    // average order value.
+    "subquery_scalar" ->
       """SELECT o_orderkey, o_custkey, o_totalprice
         |FROM orders o
         |WHERE o_totalprice > 1.5 * (SELECT avg(o2.o_totalprice) FROM orders o2
         |                            WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey ASC""".stripMargin)
-  }
-
-  /** IN subquery (rewritten by Catalyst to a left-semi join). */
-  def subqueryIn(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(
+        |ORDER BY o_orderkey ASC""".stripMargin,
+    // IN subquery (rewritten by Catalyst to a left-semi join).
+    "subquery_in" ->
       """SELECT o_orderstatus, count(*) AS n, round(sum(o_totalprice), 2) AS rev
         |FROM orders
         |WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal > 9000)
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus ASC""".stripMargin)
-  }
-
-  /** NOT IN over a NULLABLE subquery — the classic three-valued-logic
-    * trap, planned by Catalyst as a null-aware anti join (a plain anti
-    * join would be WRONG: one NULL in the subquery makes
-    * `x NOT IN (...)` never-true for every row). The CASE makes the
-    * subquery column nullable at PLAN time, forcing the NAAJ; its
-    * poison branch is runtime-empty by construction (no 'X' status
-    * exists), so the declared result stays the non-trivial "customers
-    * without a big order" census — NullSemanticsSpec asserts that
-    * flipping the guard to a live status empties the result, the
-    * three-valued behavior itself. Both engines implement the same
-    * SQL-standard semantics, so this is exactly oracle-able. */
-  def subqueryNotIn(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus ASC""".stripMargin,
+    // NOT IN over a NULLABLE subquery — the classic three-valued-logic
+    // trap, planned by Catalyst as a null-aware anti join (a plain anti
+    // join would be WRONG: one NULL in the subquery makes
+    // `x NOT IN (...)` never-true for every row). The CASE makes the
+    // subquery column nullable at PLAN time, forcing the NAAJ; its
+    // poison branch is runtime-empty by construction (no 'X' status
+    // exists), so the declared result stays the non-trivial "customers
+    // without a big order" census — NullSemanticsSpec asserts that
+    // flipping the guard to a live status empties the result, the
+    // three-valued behavior itself. Both engines implement the same
+    // SQL-standard semantics, so this is exactly oracle-able.
+    "subquery_not_in" ->
       """SELECT c_nationkey, count(*) AS n
         |FROM customer
         |WHERE c_custkey NOT IN (
         |  SELECT CASE WHEN o_orderstatus = 'X' THEN NULL ELSE o_custkey END
         |  FROM orders WHERE o_totalprice > 300000)
-        |GROUP BY c_nationkey ORDER BY c_nationkey ASC""".stripMargin)
-  }
-
-  /** Correlated EXISTS + NOT EXISTS in one predicate: market segments of
-    * customers who placed a >200k order but never had an 'F'-status one.
-    * Catalyst rewrites EXISTS to a left-semi and NOT EXISTS to a left-anti
-    * join (`RewritePredicateSubquery`), so both scale as hash joins keyed
-    * on the correlation key — no per-row subquery execution ever happens. */
-  def subqueryExists(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(
-      """SELECT c_mktsegment, count(*) AS n
-        |FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 200000)
-        |  AND NOT EXISTS (SELECT 1 FROM orders o2
-        |                  WHERE o2.o_custkey = c.c_custkey AND o2.o_orderstatus = 'F')
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment ASC""".stripMargin)
-  }
-
-  /** Recursive CTE (Spark 4's `UnionLoop`): a 12-row month spine built by
-    * recursion, left-joined to per-month order revenue. The recursion here
-    * is deliberately driver-scale (each step materializes one tiny
-    * increment; depth 12 ≪ `spark.sql.cteRecursionLevelLimit`); the
-    * corpus-sized work stays in the one hash aggregate over orders. For
-    * bulk spines prefer `sequence()` + explode (ts_gapfill) — this query
-    * exists to cover the SQL-standard recursive surface, which both
-    * engines execute with identical fixpoint semantics. */
-  def sqlRecursiveCte(spark: SparkSession, dir: String): DataFrame = {
-    Tables.registerAll(spark, dir)
-    spark.sql(
-      """WITH RECURSIVE m(mon) AS (
-        |  SELECT 1
-        |  UNION ALL
-        |  SELECT mon + 1 FROM m WHERE mon < 12
-        |)
-        |SELECT mon, count(o_orderkey) AS n,
-        |  round(coalesce(sum(o_totalprice), 0), 2) AS rev
-        |FROM m LEFT JOIN orders ON month(o_orderdate) = mon
-        |GROUP BY mon ORDER BY mon ASC""".stripMargin)
-  }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "subquery_exists"   -> (subqueryExists _),
-    "sql_recursive_cte" -> (sqlRecursiveCte _),
-    "subquery_not_in"   -> (subqueryNotIn _),
-    "agg_pivot"         -> (aggPivot _),
-    "agg_unpivot"       -> (aggUnpivot _),
-    "sample_systematic" -> (sampleSystematic _),
-    "join_lateral"      -> (joinLateral _),
-    "subquery_scalar"   -> (subqueryScalar _),
-    "subquery_in"       -> (subqueryIn _))
-
-  val oracleSql: Map[String, String] = Map(
+        |GROUP BY c_nationkey ORDER BY c_nationkey ASC""".stripMargin,
+    // Correlated EXISTS + NOT EXISTS in one predicate: market segments of
+    // customers who placed a >200k order but never had an 'F'-status one.
+    // Catalyst rewrites EXISTS to a left-semi and NOT EXISTS to a left-anti
+    // join (`RewritePredicateSubquery`), so both scale as hash joins keyed
+    // on the correlation key — no per-row subquery execution ever happens.
     "subquery_exists" ->
       """SELECT c_mktsegment, count(*) AS n
         |FROM customer c
@@ -166,6 +107,14 @@ object SqlOps {
         |  AND NOT EXISTS (SELECT 1 FROM orders o2
         |                  WHERE o2.o_custkey = c.c_custkey AND o2.o_orderstatus = 'F')
         |GROUP BY c_mktsegment ORDER BY c_mktsegment ASC""".stripMargin,
+    // Recursive CTE (Spark 4's `UnionLoop`): a 12-row month spine built by
+    // recursion, left-joined to per-month order revenue. The recursion here
+    // is deliberately driver-scale (each step materializes one tiny
+    // increment; depth 12 ≪ `spark.sql.cteRecursionLevelLimit`); the
+    // corpus-sized work stays in the one hash aggregate over orders. For
+    // bulk spines prefer `sequence()` + explode (ts_gapfill) — this query
+    // exists to cover the SQL-standard recursive surface, which both
+    // engines execute with identical fixpoint semantics.
     "sql_recursive_cte" ->
       """WITH RECURSIVE m(mon) AS (
         |  SELECT 1
@@ -175,14 +124,14 @@ object SqlOps {
         |SELECT mon, count(o_orderkey) AS n,
         |  round(coalesce(sum(o_totalprice), 0), 2) AS rev
         |FROM m LEFT JOIN orders ON month(o_orderdate) = mon
-        |GROUP BY mon ORDER BY mon ASC""".stripMargin,
-    "subquery_not_in" ->
-      """SELECT c_nationkey, count(*) AS n
-        |FROM customer
-        |WHERE c_custkey NOT IN (
-        |  SELECT CASE WHEN o_orderstatus = 'X' THEN NULL ELSE o_custkey END
-        |  FROM orders WHERE o_totalprice > 300000)
-        |GROUP BY c_nationkey ORDER BY c_nationkey ASC""".stripMargin,
+        |GROUP BY mon ORDER BY mon ASC""".stripMargin)
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "agg_pivot"         -> (aggPivot _),
+    "agg_unpivot"       -> (aggUnpivot _),
+    "sample_systematic" -> (sampleSystematic _)) ++ sql.view.mapValues(Tables.sql)
+
+  val oracleSql: Map[String, String] = sql ++ Map(
     "agg_pivot" ->
       """SELECT user_id,
         | count(*) FILTER (WHERE event_type = 'click') AS click,
@@ -204,23 +153,5 @@ object SqlOps {
       """SELECT l_returnflag, count(*) AS n,
         | round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
         |FROM lineitem WHERE l_orderkey % 10 = 0
-        |GROUP BY l_returnflag ORDER BY l_returnflag ASC""".stripMargin,
-    "join_lateral" ->
-      """SELECT c_custkey, t.o_orderkey, t.o_totalprice
-        |FROM customer,
-        |LATERAL (SELECT o_orderkey, o_totalprice FROM orders
-        |         WHERE o_custkey = c_custkey
-        |         ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 2) t
-        |ORDER BY c_custkey ASC, t.o_totalprice DESC, t.o_orderkey ASC""".stripMargin,
-    "subquery_scalar" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders o
-        |WHERE o_totalprice > 1.5 * (SELECT avg(o2.o_totalprice) FROM orders o2
-        |                            WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey ASC""".stripMargin,
-    "subquery_in" ->
-      """SELECT o_orderstatus, count(*) AS n, round(sum(o_totalprice), 2) AS rev
-        |FROM orders
-        |WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal > 9000)
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus ASC""".stripMargin)
+        |GROUP BY l_returnflag ORDER BY l_returnflag ASC""".stripMargin)
 }

@@ -48,18 +48,4 @@ class GoldenSmokeSpec extends AnyFunSuite {
     assert(rows.length === 6)
     assert(rows.map(_.getAs[Long]("count_order")).forall(_ > 0))
   }
-
-  test("every oracleSql key has a matching query") {
-    val qs = SparkEntry.queries.keySet
-    val orphans = SparkEntry.oracleSql.keySet -- qs
-    assert(orphans.isEmpty, s"oracleSql without queries: $orphans")
-    // the intentional no-oracle ops (engine-specific hashes / stubbed
-    // codec / no DuckDB eigensolver for llm_pca / no recursive-CTE form
-    // for graph_kcore's iterative deletion)
-    assert((qs -- SparkEntry.oracleSql.keySet) ===
-      Set("agg_approx_hll", "agg_hll_union", "agg_approx_pctl", "agg_kmv_distinct",
-        "agg_countmin", "llm_minhash", "llm_simhash", "llm_mm_features", "llm_pca",
-        "graph_kcore", "llm_emb_pq", "llm_bpe_train", "agg_theta_union",
-        "agg_quantile_union", "llm_minhash_capped", "llm_bpe_encode"))
-  }
 }

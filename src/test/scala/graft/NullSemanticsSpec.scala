@@ -13,7 +13,7 @@ class NullSemanticsSpec extends AnyFunSuite {
 
   test("null-free NOT IN equals the anti join; one NULL empties it") {
     Tables.registerAll(spark, sf0001)
-    val declared = operators.SqlOps.subqueryNotIn(spark, sf0001)
+    val declared = SparkEntry.queries("subquery_not_in")(spark, sf0001)
       .collect().map(r => (r.getAs[Number](0).longValue(), r.getLong(1))).toSet
     val anti = Tables.customer(spark, sf0001)
       .join(Tables.orders(spark, sf0001).filter(col("o_totalprice") > 300000),

@@ -73,7 +73,7 @@ class OperatorSemantics2Spec extends AnyFunSuite {
   }
 
   test("lateral top-2 equals the window-function top-2") {
-    val lateral = SqlOps.joinLateral(spark, sf0001)
+    val lateral = SparkEntry.queries("join_lateral")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey").asc)

@@ -670,7 +670,7 @@ class Round8OpsSpec extends AnyFunSuite {
   }
 
   test("dq_outlier_iqr: fences match driver-side percentile_disc semantics") {
-    val out = operators.DataQuality.dqOutlierIqr(spark, sf0001).collect()
+    val out = SparkEntry.queries("dq_outlier_iqr")(spark, sf0001).collect()
     assert(out.length === 25)
     val rev = Tables.orders(spark, sf0001)
       .groupBy("o_custkey").agg(round(sum("o_totalprice"), 2).as("rev"))

@@ -13,19 +13,19 @@ class Round9OpsSpec extends AnyFunSuite {
   import TestSpark._
 
   test("tpch_q6/q13/q15/q17/q18: non-degenerate results with the declared shapes") {
-    val q6 = operators.Workload.tpchQ6(spark, sf0001).collect()
+    val q6 = SparkEntry.queries("tpch_q6")(spark, sf0001).collect()
     assert(q6.length == 1 && q6.head.getDouble(0) > 0)
-    val q13 = operators.Workload.tpchQ13(spark, sf0001).collect()
+    val q13 = SparkEntry.queries("tpch_q13")(spark, sf0001).collect()
     // every customer appears in exactly one bucket of the distribution
     assert(q13.map(_.getLong(1)).sum ==
       Tables.customer(spark, sf0001).count())
-    val q15 = operators.Workload.tpchQ15(spark, sf0001).collect()
+    val q15 = SparkEntry.queries("tpch_q15")(spark, sf0001).collect()
     assert(q15.nonEmpty, "a quarter with revenue must crown a supplier")
     val best = q15.head.getDouble(2)
     q15.foreach(r => assert(r.getDouble(2) == best, "all rows tie the max"))
-    val q17 = operators.Workload.tpchQ17(spark, sf0001).collect()
+    val q17 = SparkEntry.queries("tpch_q17")(spark, sf0001).collect()
     assert(q17.length == 1 && q17.head.getDouble(0) >= 0)
-    val q18 = operators.Workload.tpchQ18(spark, sf0001).collect()
+    val q18 = SparkEntry.queries("tpch_q18")(spark, sf0001).collect()
     assert(q18.nonEmpty && q18.length <= 20)
     q18.foreach(r => assert(r.getDouble(5) > 250.0, "HAVING bound"))
   }
@@ -122,7 +122,7 @@ class Round9OpsSpec extends AnyFunSuite {
   }
 
   test("tpch_q4/q9/q19/q22: adapted shapes stay non-degenerate and consistent") {
-    val q4 = operators.Workload.tpchQ4(spark, sf0001).collect()
+    val q4 = SparkEntry.queries("tpch_q4")(spark, sf0001).collect()
     assert(q4.nonEmpty)
     // EXISTS can only shrink the base set
     val base = Tables.orders(spark, sf0001)
@@ -130,13 +130,13 @@ class Round9OpsSpec extends AnyFunSuite {
       .groupBy("o_orderpriority").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     q4.foreach(r => assert(r.getLong(1) <= base(r.getString(0))))
-    val q9 = operators.Workload.tpchQ9(spark, sf0001).collect()
+    val q9 = SparkEntry.queries("tpch_q9")(spark, sf0001).collect()
     assert(q9.nonEmpty && q9.forall(_.getDouble(2) > 0))
-    val q19 = operators.Workload.tpchQ19(spark, sf0001).collect()
+    val q19 = SparkEntry.queries("tpch_q19")(spark, sf0001).collect()
     assert(q19.length == 1 && q19.head.getDouble(0) > 0)
-    val q22 = operators.Workload.tpchQ22(spark, sf0001).collect()
+    val q22 = SparkEntry.queries("tpch_q22")(spark, sf0001).collect()
     assert(q22.nonEmpty)
-    val q21 = operators.Workload.tpchQ21(spark, sf0001).collect()
+    val q21 = SparkEntry.queries("tpch_q21")(spark, sf0001).collect()
     assert(q21.nonEmpty && q21.length <= 10)
     // counts ordered desc with name tiebreak
     q21.sliding(2).foreach(p => assert(p(0).getLong(1) >= p(1).getLong(1)))
