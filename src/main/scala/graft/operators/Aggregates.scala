@@ -1043,6 +1043,7 @@ object Aggregates {
         sum(round(col("c_acctbal") * 100, 0).cast("long")).as("y"))
     val a = g.select(col("k").as("ka"), col("x").as("xa"), col("y").as("ya"))
     val b = g.select(col("k").as("kb"), col("x").as("xb"), col("y").as("yb"))
+    // self-pair bound: 25 nation rows, so at most 300 pairs
     val pairs = a.join(broadcast(b), col("ka") < col("kb"))
       .select(
         when(col("xb") > col("xa"), 1L).when(col("xb") < col("xa"), -1L)

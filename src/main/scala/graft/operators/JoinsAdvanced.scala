@@ -44,6 +44,7 @@ object JoinsAdvanced {
           expr("a_size DIV 3 + 1"))))
     val b = p.select(col("p_partkey").as("b_key"), col("p_brand").as("b_brand"),
         col("p_size").as("b_size"), expr("p_size DIV 3").as("b_bkt"))
+    // self-pair bound: 9 candidate sizes per output's 5, so candidates stay ~2× the output
     a.join(b, col("brand") === col("b_brand") && col("bkt") === col("b_bkt") &&
              col("a_key") < col("b_key") &&
              abs(col("a_size") - col("b_size")) <= 2)
@@ -171,16 +172,12 @@ object JoinsAdvanced {
     val g = Tables.part(spark, dir)
       .groupBy(col("p_brand").as("brand"), col("p_name").as("name"))
       .agg(count(lit(1)).as("cnt"))
-    val a = g.select(col("brand"), col("name").as("a_name"), col("cnt").as("a_cnt"))
-    val b = g.select(col("brand").as("b_brand"), col("name").as("b_name"),
-      col("cnt").as("b_cnt"))
-    val diff = a.join(b, col("brand") === col("b_brand") &&
-        col("a_name") < col("b_name") &&
-        abs(length(col("a_name")) - length(col("b_name"))) <= 3)
-      .withColumn("dist", levenshtein(col("a_name"), col("b_name"), 3))
+    val diff = BlockedPairs.selfPairs(g, Seq("brand"), "name",
+        abs(length(col("a.name")) - length(col("b.name"))) <= 3)
+      .withColumn("dist", levenshtein(col("a.name"), col("b.name"), 3))
       .filter(col("dist") >= 0)
-      .select(col("brand"), col("dist").cast("double").as("dist"),
-        (col("a_cnt") * col("b_cnt")).as("w"))
+      .select(col("a.brand").as("brand"), col("dist").cast("double").as("dist"),
+        (col("a.cnt") * col("b.cnt")).as("w"))
     val same = g.filter(col("cnt") >= 2)
       .select(col("brand"), lit(0.0).as("dist"),
         expr("cnt * (cnt - 1) DIV 2").as("w")) // integral division: w stays BIGINT

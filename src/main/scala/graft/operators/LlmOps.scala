@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.sim.cosineSim
 
 /** SURVEY.md §2.J — LLM-data-pipeline operators (mandated by the task:
   * dedup, similarity search, text analysis, multimodal rows) over the
@@ -33,16 +34,14 @@ object LlmOps {
     * never affects set similarity, so results are unchanged). */
   private def toks: Column = sort_array(array_distinct(split(col("text"), " ")))
 
+  /** The document's tokens in text order (shingles and counts need it). */
+  private[operators] def toksRaw: Column = split(col("text"), " ")
+
   /** dot(a,b) via zip_with + aggregate — stays inside codegen. Used where
     * only the dot product is needed (e.g. norms); full cosine goes through
     * the fused native expression graft.functions.CosineSim. */
   private def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
-  /** Fused single-pass kernel (bit-identical to the HOF formulation —
-    * see SimilarityKernels). */
-  private def cosine(a: Column, b: Column): Column =
-    graft.functions.sim.cosineSim(a, b)
 
   /** Exact text dedup: survivor = min doc_id per text (deterministic,
     * §2.Z.6), kept-count per source. */
@@ -55,10 +54,9 @@ object LlmOps {
       .orderBy(col("source").asc)
 
   /** Near-dup pairs by token-set Jaccard ≥ 0.8, blocked by
-    * (lang, n_chars/100 band) to bound the pair space. Pair generation
-    * goes through BlockedPairs.saltedSelfPairs — the shared de-skewed
-    * candidate path of the dedup family (same pairs as a plain blocked
-    * self-join; see that object's scaladoc for the triangle scheme). */
+    * (lang, n_chars/100 band) to bound the pair space. The ~50 blocks are
+    * few against a cluster's width, so the pairs come from BlockedPairs'
+    * salted form (same pairs as the plain blocked self-join). */
   def llmDedupNear(spark: SparkSession, dir: String): DataFrame =
     nearDupPairs(spark, dir).orderBy(col("a_id").asc, col("b_id").asc)
 
@@ -90,7 +88,7 @@ object LlmOps {
     // arrays (array_intersect/array_union allocated per pair on the ~600k
     // blocked pairs at sf0.1); same integers ⇒ oracle-identical
     val jac = graft.functions.sim.jaccardLongSim(col("a.toks"), col("b.toks"))
-    BlockedPairs.saltedSelfPairs(d, Seq("lang", "band"))
+    BlockedPairs.selfPairs(d, Seq("lang", "band"), "id", salted = true)
       .select(col("a.id").as("a_id"), col("b.id").as("b_id"),
         round(jac, 6).as("jac"))
       .filter(col("jac") >= 0.8)
@@ -127,9 +125,9 @@ object LlmOps {
     * the OUTPUT itself). Contrast llmEmbNeardup, where the per-candidate
     * kernel is a 64-dim cosine and the same collapse WINS 3.4× at 10×. */
   def llmMinhash(spark: SparkSession, dir: String): DataFrame = {
-    val jac = graft.functions.sim.jaccardLongSim(col("x.toks"), col("y.toks"))
+    val jac = graft.functions.sim.jaccardLongSim(col("a.toks"), col("b.toks"))
     minhashCandidates(minhashBandsOf(minhashTokenIds(spark, dir)))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"),
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
         round(jac, 6).as("jac"))
       .filter(col("jac") >= 0.8) // LSH verify step
       .orderBy(col("a_id").asc, col("b_id").asc)
@@ -193,11 +191,11 @@ object LlmOps {
         col("bh0"), col("bh1"), col("bh2"))
   }
 
-  /** The DF-CAP variant (round 12, VERDICT r11 task 4 — STRESS.md's
-    * mitigation (b) made concrete): each (band, band-hash) bucket is
-    * truncated to its `cap` lowest doc_ids BEFORE the self-join, so an
-    * undeduplicated corpus (verbatim duplication factor K) generates at
-    * most cap·(cap−1)/2 candidates per bucket instead of K²-quadratic —
+  /** The DF-CAP variant (STRESS.md's mitigation (b)): each (band,
+    * band-hash) bucket is truncated to its `cap` lowest doc_ids BEFORE
+    * the self-join, so an undeduplicated corpus (verbatim duplication
+    * factor K) generates at most cap·(cap−1)/2 candidates per bucket
+    * instead of K²-quadratic —
     * the posting-list df-cap idiom llm_ngram_jaccard already ships,
     * applied to LSH bands. This is a deliberate, NON-SILENT recall
     * trade: pairs whose every shared band is wider than `cap` are
@@ -210,12 +208,11 @@ object LlmOps {
     * corpus, strict-subset always — note the sf0.001 documents FIXTURE
     * is itself duplication-heavy: direct emits 31k pairs and cap=64
     * keeps 2.2k, which is the cap doing its job, not a recall bug).
-    * DECLARED round 13 as `llm_minhash_capped` (VERDICT r12 task 3 /
-    * r11 named gap 2): no-oracle — the kept pair SET depends on this
-    * engine's band-hash space, so no engine-independent SQL reproduces
-    * it — with MinhashCapSpec's subset/equality pins and the measured
-    * 5-21× (10× duplication) / 3.3× (K=100) STRESS.md datums as the
-    * bound. llm_minhash keeps the full-listing contract; this entry
+    * Declared as `llm_minhash_capped`, no-oracle: the kept pair SET
+    * depends on this engine's band-hash space, so no engine-independent
+    * SQL reproduces it. MinhashCapSpec's subset/equality pins and the
+    * measured 5-21× (10× duplication) / 3.3× (K=100) STRESS.md datums
+    * are the bound. llm_minhash keeps the full-listing contract; this entry
     * puts the production-recommended capped path under the driver's
     * per-round regression check. */
   private[graft] def llmMinhashCapped(spark: SparkSession, dir: String,
@@ -224,37 +221,26 @@ object LlmOps {
     val w = Window.partitionBy("band", "bh").orderBy(col("doc_id").asc)
     val capped = bands.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= cap).drop("rk")
-    val jac = graft.functions.sim.jaccardLongSim(col("x.toks"), col("y.toks"))
+    val jac = graft.functions.sim.jaccardLongSim(col("a.toks"), col("b.toks"))
     minhashCandidates(capped)
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"),
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
         round(jac, 6).as("jac"))
       .filter(col("jac") >= 0.8)
       .orderBy(col("a_id").asc, col("b_id").asc)
   }
 
-  /** llmMinhash stage 2 — bucket self-join on (band, band-hash), each
-    * candidate pair emitted ONCE at its first shared band (the earlier
-    * bands' hashes ride along and the predicate drops pairs that already
-    * matched before — the standard LSH dedup trick; the naive pair-level
-    * `distinct()` shuffled 11M rows at sf0.1 and dominated the query).
-    * The size-ratio guard (jac ≥ 0.8 ⇒ 5·min(n) ≥ 4·max(n), integer
-    * form) short-circuits the merge kernel on ~25% of candidates. */
-  private[graft] def minhashCandidates(bands: DataFrame): DataFrame = {
-    val firstSharedBand =
-      (col("x.band") === 0) ||
-      (col("x.band") === 1 && col("x.bh0") =!= col("y.bh0")) ||
-      (col("x.band") === 2 && col("x.bh0") =!= col("y.bh0") && col("x.bh1") =!= col("y.bh1")) ||
-      (col("x.band") === 3 && col("x.bh0") =!= col("y.bh0") &&
-        col("x.bh1") =!= col("y.bh1") && col("x.bh2") =!= col("y.bh2"))
-    bands.as("x")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .filter(firstSharedBand &&
-        least(col("x.n"), col("y.n")) * 5 >= greatest(col("x.n"), col("y.n")) * 4)
-  }
+  /** llmMinhash stage 2 — the (band, band-hash) bucket pairs, each
+    * emitted ONCE at its first shared band (BlockedPairs.lshPairs reads
+    * the carried bh0..bh2; the naive pair-level `distinct()` shuffled 11M
+    * rows at sf0.1 and dominated the query). The size-ratio guard
+    * (jac ≥ 0.8 ⇒ 5·min(n) ≥ 4·max(n), integer form) short-circuits the
+    * merge kernel on ~25% of candidates. */
+  private[graft] def minhashCandidates(bands: DataFrame): DataFrame =
+    BlockedPairs.lshPairs(bands, "doc_id", 4,
+      least(col("a.n"), col("b.n")) * 5 >= greatest(col("a.n"), col("b.n")) * 4)(
+      (side, j) => col(s"$side.bh$j"))
 
-  private def embDouble(spark: SparkSession, dir: String): DataFrame =
+  private[operators] def embDouble(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("e"))
 
@@ -264,11 +250,11 @@ object LlmOps {
     val q = emb.filter(col("vec_id") === 0).select(col("e").as("qe"))
     emb.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
-      .select(col("vec_id"), round(cosine(col("e"), col("qe")), 6).as("sim"))
-      // round-12 NaN policy (VERDICT r11 task 5): a zero-norm vector's
-      // cosine is NaN, and NaN ranks ABOVE every number in both engines —
-      // a top-k that admits NaN returns garbage neighbors first. Excluded
-      // explicitly here and mirrored in the oracle; NanPolicySpec pins it.
+      .select(col("vec_id"), round(cosineSim(col("e"), col("qe")), 6).as("sim"))
+      // NaN policy: a zero-norm vector's cosine is NaN, and NaN ranks
+      // ABOVE every number in both engines — a top-k that admits NaN
+      // returns garbage neighbors first. Excluded explicitly here and
+      // mirrored in the oracle; NanPolicySpec pins it.
       .filter(!isnan(col("sim")))
       .orderBy(col("sim").desc, col("vec_id").asc)
       .limit(10)
@@ -283,7 +269,7 @@ object LlmOps {
     emb.select(col("vec_id").as("n_id"), col("e"))
       .crossJoin(broadcast(q))
       .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"), round(cosine(col("e"), col("qe")), 6).as("sim"))
+      .select(col("q_id"), col("n_id"), round(cosineSim(col("e"), col("qe")), 6).as("sim"))
       .filter(!isnan(col("sim"))) // same NaN-ranks-top exclusion as llmCosineKnn
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 5)
@@ -515,7 +501,7 @@ object LlmOps {
     val wVote = Window.partitionBy("qid").orderBy(col("votes").desc, col("label").asc)
     cand.crossJoin(broadcast(q))
       .select(col("qid"), col("qlabel"), col("vec_id"), col("label"),
-        round(cosine(col("e"), col("qe")), 6).as("sim"))
+        round(cosineSim(col("e"), col("qe")), 6).as("sim"))
       .withColumn("rn", row_number().over(wTop))
       .filter(col("rn") <= 5)
       .groupBy("qid", "qlabel", "label")

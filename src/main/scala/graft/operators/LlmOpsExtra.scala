@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.sim.cosineSim
+import LlmOps.{embDouble, toksRaw}
 
 /** Extended training-data-pipeline operators beyond SURVEY §2.J's core
   * set: document fingerprinting, language-ID, quality scoring, SimHash
@@ -141,36 +143,6 @@ object LlmOpsExtra {
       .orderBy(col("lang").asc)
   }
 
-  /** n-gram (3-token shingle) Jaccard near-dup — order-sensitive dedup:
-    * token-set Jaccard (llm_dedup_near) treats reshuffled documents as
-    * identical; shingle Jaccard does not, which is why corpus dedup runs
-    * both. Threshold 0.3: shingle similarity is far more discriminative
-    * than token-set similarity (6 true pairs vs 2391 at sf0.01).
-    *
-    * Round-7 rewrite: INVERTED-INDEX intersect counting instead of
-    * blocked pair-verify. The round-6 form enumerated every within-block
-    * pair (588k at sf0.1) and ran a merge kernel over two sorted shingle
-    * arrays per pair, which meant array payloads through the pair
-    * shuffle and fat-row SMJ sorts — the memory-pressure-sensitive stage
-    * behind its 10× driver-vs-local inflation (r6 verdict). The index
-    * form explodes each doc's distinct shingle set once (occurrence
-    * stream of fixed-width longs), self-joins on the SHINGLE hash within
-    * the block, and counts shared shingles per pair: work scales with
-    * pairs that actually share a shingle (74k at sf0.1 — 8× fewer than
-    * the blocked pair space; max per-shingle df 8, so no hot key), every
-    * shuffle row is a handful of longs, and no array ever crosses a
-    * shuffle or sits in a sort buffer. jac = c/(na+nb−c) divides the
-    * SAME integers as the oracle's list_intersect/list_concat form
-    * (shingles hash-encoded map-side; collision odds ~n²/2⁶⁵ — the
-    * round-6 budget — leave every count unchanged). Pairs below the
-    * threshold share few shingles and die in the count aggregate; pairs
-    * with NO shared shingle (jac = 0) never enter the stream at all,
-    * which is exactly the candidate pruning PPJoin-family algorithms
-    * formalize. At 100 TB the df distribution is the thing to watch:
-    * boilerplate shingles with huge df would blow up the df² pair
-    * stream — SkewCanarySpec bounds the hottest shingle's work share,
-    * and a production corpus would cap df (drop non-discriminative
-    * shingles) before the self-join. */
   /** The encoded 3-gram shingle frame behind llmNgramJaccard, MEMOIZED
     * per (session, dir) — parquet, one write job: it feeds the df
     * aggregate and both sides of the intersect join, and the per-doc
@@ -181,7 +153,6 @@ object LlmOpsExtra {
     * joins later. */
   private[operators] def ngramShFrame(spark: SparkSession, dir: String): DataFrame =
     MemoFrames.frame(spark, s"ngram3_sh|$dir") {
-      val toksRaw = split(col("text"), " ") // order matters for shingles
       val nsh = greatest(size(toksRaw) - 2, lit(1))
       val shingles = array_distinct(transform(sequence(lit(1), nsh),
         i => concat_ws(" ", slice(toksRaw, i, lit(3)))))
@@ -192,20 +163,42 @@ object LlmOpsExtra {
         .withColumn("n", size(col("sh")).cast("bigint"))
     }
 
+  /** n-gram (3-token shingle) Jaccard near-dup — order-sensitive dedup:
+    * token-set Jaccard (llm_dedup_near) treats reshuffled documents as
+    * identical; shingle Jaccard does not, which is why corpus dedup runs
+    * both. Threshold 0.3: shingle similarity is far more discriminative
+    * than token-set similarity (6 true pairs vs 2391 at sf0.01).
+    *
+    * INVERTED-INDEX intersect counting, not blocked pair-verify: each
+    * doc's distinct shingle set explodes once (an occurrence stream of
+    * fixed-width longs), self-joins on the SHINGLE hash within the
+    * block, and shared shingles are counted per pair. Work scales with
+    * pairs that actually share a shingle (74k at sf0.1, 8× fewer than the
+    * 588k blocked pairs; max per-shingle df 8, so no hot key), every
+    * shuffle row is a handful of longs, and no array ever crosses a
+    * shuffle or sits in a sort buffer. jac = c/(na+nb−c) divides the
+    * SAME integers as the oracle's list_intersect/list_concat form
+    * (shingles hash-encoded map-side; collision odds ~n²/2⁶⁵ leave every
+    * count unchanged). Pairs with NO shared shingle (jac = 0) never enter
+    * the stream, the candidate pruning PPJoin-family algorithms
+    * formalize. At 100 TB the df distribution is the thing to watch:
+    * boilerplate shingles with huge df would blow up the df² pair
+    * stream — SkewCanarySpec bounds the hottest shingle's work share,
+    * and a production corpus would cap df (drop non-discriminative
+    * shingles) before the self-join. */
   def llmNgramJaccard(spark: SparkSession, dir: String): DataFrame = {
     val d = ngramShFrame(spark, dir)
     val occ = d.select(col("id"), col("lang"), col("band"), col("n"),
       explode(col("sh")).as("h"))
-    // Round-8 candidate pruning (the PPJoin prefix-filter idea, applied
-    // at the shingle grain): a shingle with document frequency 1 in its
+    // Candidate pruning (the PPJoin prefix-filter idea, applied at the
+    // shingle grain): a shingle with document frequency 1 in its
     // block cannot witness any pair, and on natural text that is the
     // overwhelming majority of the stream — at sf0.1 the full occurrence
     // stream is ~5M rows while the df≥2 survivors are ~2% of it. The df
     // aggregate makes ONE narrow pass over the stream (partial-agg longs),
     // the surviving (lang, band, h) set is tiny and BROADCAST into a
     // map-side semi join, so the expensive self-join's inputs shrink by
-    // ~50× and the r7 form's two full-stream shuffle+sorts (the
-    // memory-pressure stage behind its 11× driver inflation) disappear.
+    // ~50× and no full-stream shuffle+sort remains.
     // Exactness: every shared shingle of every pair has df≥2 by
     // definition, so no pair loses a witness, and the denominators na/nb
     // were computed per doc BEFORE pruning. At 100 TB the df≥2 set may
@@ -216,13 +209,9 @@ object LlmOpsExtra {
       .filter(col("df") >= 2)
       .select(col("lang"), col("band"), col("h"))
     val occ2 = occ.join(broadcast(hot), Seq("lang", "band", "h"), "left_semi")
-    occ2
-      .join(occ2.select(col("id").as("b_id"), col("lang").as("r_lang"),
-          col("band").as("r_band"), col("n").as("nb"), col("h").as("r_h")),
-        col("h") === col("r_h") && col("lang") === col("r_lang") &&
-          col("band") === col("r_band") && col("id") < col("b_id"))
-      .groupBy(col("id").as("a_id"), col("b_id"))
-      .agg(count(lit(1)).as("c"), max("n").as("na"), max("nb").as("nb"))
+    BlockedPairs.selfPairs(occ2, Seq("h", "lang", "band"), "id")
+      .groupBy(col("a.id").as("a_id"), col("b.id").as("b_id"))
+      .agg(count(lit(1)).as("c"), max("a.n").as("na"), max("b.n").as("nb"))
       .select(col("a_id"), col("b_id"),
         round(col("c").cast("double") / (col("na") + col("nb") - col("c")), 6).as("jac"))
       .filter(col("jac") >= 0.3)
@@ -288,7 +277,7 @@ object LlmOpsExtra {
     * ordering remains the production answer to duplication. */
   def llmSimhash(spark: SparkSession, dir: String): DataFrame =
     simhashCandidates(simhashSignatures(spark, dir))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"), col("hamming"))
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"), col("hamming"))
       .orderBy(col("a_id").asc, col("b_id").asc)
 
   /** Per-doc 64-bit signature, computed INSIDE the document row by the
@@ -302,40 +291,25 @@ object LlmOpsExtra {
       .select(col("doc_id"), graft.functions.sim.simhash64(
         transform(array_distinct(split(col("text"), " ")), t => xxhash64(t))).as("simhash"))
 
-  /** Band bucketing + self-join + Hamming ≤ 3 over a (doc_id, simhash)
-    * frame; returns the x/y-aliased candidate frame
-    * with the `hamming` column. */
+  /** Band bucketing + LSH pairs + Hamming ≤ 3 over a (doc_id, simhash)
+    * frame; returns the a/b-aliased candidate frame with the `hamming`
+    * column. Band j's hash is recomputed from the carried simhash, so
+    * each pair is emitted once, at its first shared band. */
   private[graft] def simhashCandidates(sig: DataFrame): DataFrame = {
     val bandCols = (0 until 4).map { j =>
       struct(lit(j).as("band"),
         shiftrightunsigned(col("simhash"), j * 16).bitwiseAND(0xFFFFL).as("bh"))
     }
-    // each pair emitted once, at its first shared band (bh_j recomputable
-    // from the carried simhash) — avoids the pair-level distinct shuffle
     val bands = sig
       .select(col("doc_id"), col("simhash"), explode(array(bandCols: _*)).as("bnd"))
       .select(col("doc_id"), col("simhash"),
         col("bnd.band").as("band"), col("bnd.bh").as("bh"))
-    def bandOf(side: String, j: Int) =
-      shiftrightunsigned(col(s"$side.simhash"), j * 16).bitwiseAND(0xFFFFL)
-    val firstSharedBand = (0 until 4).map { j =>
-      col("x.band") === j && (0 until j)
-        .map(p => bandOf("x", p) =!= bandOf("y", p))
-        .foldLeft(lit(true))(_ && _)
-    }.reduce(_ || _)
-    bands.as("x")
-      .join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .filter(firstSharedBand)
+    BlockedPairs.lshPairs(bands, "doc_id", 4)((side, j) =>
+        shiftrightunsigned(col(s"$side.simhash"), j * 16).bitwiseAND(0xFFFFL))
       .withColumn("hamming",
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))))
+        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))))
       .filter(col("hamming") <= 3)
   }
-
-  private def embDouble(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("e"))
 
   /** Deterministic standard Gaussian: Box-Muller over two Knuth-hash
     * uniforms (llm_weighted_sample's engine-exact modular arithmetic —
@@ -358,17 +332,12 @@ object LlmOpsExtra {
   private[graft] def gaussianVectors(count: Int, dim: Int, base: Long): Seq[Seq[Double]] =
     (0 until count).map(j => (1 to dim).map(i => gauss(base + j.toLong * dim + i)))
 
-  /** Fused native cosine kernel (graft.functions.CosineSim) — bit-identical
-    * to the zip_with+aggregate HOF formulation, single pass, codegen'd. */
-  private def cos(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    graft.functions.sim.cosineSim(a, b)
-
   /** Embedding-cosine near-duplicate pairs, blocked by label. Threshold
     * 0.4 is a demo value — this synthetic corpus's vectors are
     * near-orthogonal (max intra-label cosine ≈ 0.51 measured); real
     * embedding dedup uses ~0.95 with the identical plan shape.
     *
-    * Hub fix (STRESS.md round 11, same family as llm_minhash — but here
+    * Hub fix (STRESS.md, same family as llm_minhash — but here
     * the collapse SHIPS): cosine is a pure function of the two vectors,
     * so the blocked pair join runs on ONE representative per distinct
     * (label, vector) class and qualifying representative pairs expand
@@ -383,9 +352,9 @@ object LlmOpsExtra {
     * Within-class
     * similarity is computed by the SAME fused kernel on (e, e) — not a
     * literal 1.0 — so rounding behaves bit-identically across forms.
-    * NaN POLICY (round 12, VERDICT r11 task 5): zero-norm vectors
-    * produce cos = NaN, which Spark's NaN-is-greatest comparisons would
-    * pass through a bare ≥ 0.4 filter as top-ranked garbage — both
+    * NaN POLICY: zero-norm vectors produce cos = NaN, which Spark's
+    * NaN-is-greatest comparisons would pass through a bare ≥ 0.4 filter
+    * as top-ranked garbage — both
     * forms and the oracle now carry an explicit !isnan / NOT isnan
     * guard, so zero-norm pairs are excluded everywhere (HubCollapseSpec
     * pins the exclusion AND the cross-form parity). Pinned by
@@ -398,21 +367,18 @@ object LlmOpsExtra {
     val classes = embDouble(spark, dir).groupBy("label", "e")
       .agg(min("vec_id").as("rep"),
         sort_array(collect_list(col("vec_id"))).as("members"))
-    val a = classes.select(col("rep").as("a_id"), col("label"),
-      col("e").as("ae"), col("members").as("ma"))
-    val b = classes.select(col("rep").as("b_id"), col("label").as("b_label"),
-      col("e").as("be"), col("members").as("mb"))
     // member lists ride through the blocked pair join and expand by
     // explode in the projection — no pair-grain joins (see llmMinhash)
-    val cross = a.join(b, col("label") === col("b_label") && col("a_id") < col("b_id"))
-      .withColumn("sim", round(cos(col("ae"), col("be")), 6))
+    val cross = BlockedPairs.selfPairs(classes, Seq("label"), "rep")
+      .withColumn("sim", round(cosineSim(col("a.e"), col("b.e")), 6))
       .filter(col("sim") >= 0.4 && !isnan(col("sim")))
-      .select(explode(col("ma")).as("av"), col("mb"), col("label"), col("sim"))
+      .select(explode(col("a.members")).as("av"), col("b.members").as("mb"),
+        col("a.label").as("label"), col("sim"))
       .select(col("av"), explode(col("mb")).as("bv"), col("label"), col("sim"))
       .select(least(col("av"), col("bv")).as("a_id"),
         greatest(col("av"), col("bv")).as("b_id"), col("label"), col("sim"))
     val within = classes
-      .withColumn("sim", round(cos(col("e"), col("e")), 6))
+      .withColumn("sim", round(cosineSim(col("e"), col("e")), 6))
       .filter(col("sim") >= 0.4 && !isnan(col("sim")) && size(col("members")) > 1)
       .select(explode(LlmOps.dupClassPairs(col("members"))).as("p"),
         col("label"), col("sim"))
@@ -420,22 +386,15 @@ object LlmOpsExtra {
     cross.unionByName(within).orderBy(col("a_id").asc, col("b_id").asc)
   }
 
-  /** Label-blocked pair join + cosine ≥ 0.4 over an arbitrary
-    * (vec_id, label, e) frame — vector grain in the direct form,
-    * representative grain in the shipped collapsed form. */
-  private[graft] def embNeardupPairsOf(vecs: DataFrame): DataFrame = {
-    val a = vecs.select(col("vec_id").as("a_id"), col("label"), col("e").as("ae"))
-    val b = vecs.select(col("vec_id").as("b_id"), col("label").as("b_label"), col("e").as("be"))
-    a.join(b, col("label") === col("b_label") && col("a_id") < col("b_id"))
-      .withColumn("sim", round(cos(col("ae"), col("be")), 6))
-      .filter(col("sim") >= 0.4 && !isnan(col("sim")))
-      .select("a_id", "b_id", "label", "sim")
-  }
-
-  /** The pre-collapse quadratic form — kept for HubCollapseSpec's
-    * pair-set-equality pin; NOT registered as a query. */
+  /** The pre-collapse quadratic form: label-blocked vector pairs with
+    * cosine ≥ 0.4, kept for HubCollapseSpec's pair-set-equality pin; NOT
+    * registered as a query. */
   private[graft] def llmEmbNeardupDirect(spark: SparkSession, dir: String): DataFrame =
-    embNeardupPairsOf(embDouble(spark, dir))
+    BlockedPairs.selfPairs(embDouble(spark, dir), Seq("label"), "vec_id")
+      .withColumn("sim", round(cosineSim(col("a.e"), col("b.e")), 6))
+      .filter(col("sim") >= 0.4 && !isnan(col("sim")))
+      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"),
+        col("a.label").as("label"), col("sim"))
       .orderBy(col("a_id").asc, col("b_id").asc)
 
   /** Hard-negative mining (round-8 addendum) — the contrastive-training
@@ -482,7 +441,7 @@ object LlmOpsExtra {
     val b = e.select(col("vec_id").as("b_id"), col("label").as("b_label"),
       col("e").as("be"))
       .repartition(spark.sparkContext.defaultParallelism)
-    val sim = round(cos(col("ae"), col("be")), 6)
+    val sim = round(cosineSim(col("ae"), col("be")), 6)
     b.join(broadcast(a), col("a_id") =!= col("b_id"))
       .select(col("a_id"), col("a_label"), col("b_id"), col("b_label"),
         sim.as("sim"))
@@ -554,7 +513,7 @@ object LlmOpsExtra {
       aggregate(pivArr(pivots),
         struct(lit(-2.0).as("sim"), lit(-1L).as("cell")),
         (acc, p) => {
-          val s = round(cos(vec, p.getField("pe")), 6)
+          val s = round(cosineSim(vec, p.getField("pe")), 6)
           when(s > acc.getField("sim"),
             struct(s.as("sim"), p.getField("p_id").as("cell"))).otherwise(acc)
         })
@@ -590,14 +549,14 @@ object LlmOpsExtra {
     val probes = e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("q_id"), col("e").as("qe"),
         explode(slice(array_sort(transform(pivArr(pivots), p =>
-          struct((lit(0.0) - round(cos(col("e"), p.getField("pe")), 6)).as("ns"),
+          struct((lit(0.0) - round(cosineSim(col("e"), p.getField("pe")), 6)).as("ns"),
             p.getField("p_id").as("cell")))), 1, 8)).as("pc"))
       .select(col("q_id"), col("qe"), col("pc.cell").as("cell"))
     // search only the probed cells
     val wTop = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id").asc)
     probes.join(assign, "cell")
       .filter(col("n_id") =!= col("q_id"))
-      .withColumn("sim", round(cos(col("qe"), col("ne")), 6))
+      .withColumn("sim", round(cosineSim(col("qe"), col("ne")), 6))
       .withColumn("rnk", row_number().over(wTop)).filter(col("rnk") <= 5)
       .select("q_id", "rnk", "n_id", "cell", "sim")
       .orderBy(col("q_id").asc, col("rnk").asc)
@@ -770,7 +729,7 @@ object LlmOpsExtra {
     val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id").asc)
     q.join(n, "bkt")
       .filter(col("n_id") =!= col("q_id"))
-      .withColumn("sim", round(cos(col("qe"), col("ne")), 6))
+      .withColumn("sim", round(cosineSim(col("qe"), col("ne")), 6))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 5)
       .select("q_id", "rnk", "n_id", "bkt", "sim")
@@ -805,16 +764,16 @@ object LlmOpsExtra {
     * keep-first near-dup policy. Clusters here are the map-side LSH sign
     * buckets (a real deployment swaps in the trained IVF codebook;
     * the plan — cluster assignment, within-cluster pairs, anti-join —
-    * is identical). Pair generation goes through the shared salted
-    * BlockedPairs path: `bkt` is a ~256-value key, exactly the
-    * low-cardinality block shape the triangle salting exists for.
+    * is identical). Pairs come from BlockedPairs' salted form: `bkt` is
+    * a ~256-value key, exactly the low-cardinality block shape the
+    * triangle salting exists for.
     * Kept/dropped per label is the report a corpus build publishes. */
   def llmSemdedup(spark: SparkSession, dir: String): DataFrame = {
     val d = withLshBucket(spark, dir)
       .select(col("vec_id").as("id"), col("label"), col("bkt"), col("e"))
-    val cos = graft.functions.sim.cosineSim(col("a.e"), col("b.e"))
-    val dropped = BlockedPairs.saltedSelfPairs(d, Seq("bkt"))
-      .filter(round(cos, 6) >= 0.25 && !isnan(cos))
+    val cos = cosineSim(col("a.e"), col("b.e"))
+    val dropped = BlockedPairs.selfPairs(d, Seq("bkt"), "id",
+        round(cos, 6) >= 0.25 && !isnan(cos), salted = true)
       .select(col("b.id").as("id")).distinct()
     d.join(dropped, Seq("id"), "left_anti")
       .groupBy("label").agg(count(lit(1)).as("kept"))
@@ -865,7 +824,7 @@ object LlmOpsExtra {
       .orderBy(col("source").asc)
   }
 
-  /** Duplicated-substring share (round-7 addendum): per document, the
+  /** Duplicated-substring share: per document, the
     * fraction of its distinct 8-token shingles that also occur in at
     * least one OTHER document — the diagnostic behind substring-level
     * dedup (Lee et al., "Deduplicating Training Data Makes Language
@@ -887,7 +846,6 @@ object LlmOpsExtra {
     * watch item is a mega-df boilerplate shingle: it contributes df
     * join rows (linear, not quadratic) — harmless. */
   def llmSubstringDedup(spark: SparkSession, dir: String): DataFrame = {
-    val toksRaw = split(col("text"), " ") // order matters for shingles
     val nsh = greatest(size(toksRaw) - 7, lit(1))
     val shingles = array_distinct(transform(sequence(lit(1), nsh),
       i => xxhash64(concat_ws(" ", slice(toksRaw, i, lit(8))))))
@@ -1037,7 +995,7 @@ object LlmOpsExtra {
     emb.crossJoin(broadcast(qv))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("doc_id"),
-        round(graft.functions.sim.cosineSim(col("e"), col("qe")), 6).as("sim"))
+        round(cosineSim(col("e"), col("qe")), 6).as("sim"))
       .filter(!isnan(col("sim")))
       .withColumn("den_rnk", row_number().over(wDen))
       .filter(col("den_rnk") <= 10)
@@ -1277,10 +1235,8 @@ object LlmOpsExtra {
 
   private def rougeBuild(spark: SparkSession, dir: String): DataFrame = {
     val fp = fpFrame(spark, dir).select(col("doc_id"), col("fph"))
-    val pairs = fp.select(col("doc_id").as("a"), col("fph"))
-      .join(fp.select(col("doc_id").as("b"), col("fph")), "fph")
-      .filter(col("a") < col("b"))
-      .select("a", "b")
+    val pairs = BlockedPairs.selfPairs(fp, Seq("fph"), "doc_id")
+      .select(col("a.doc_id").as("a"), col("b.doc_id").as("b"))
     val bigrams = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 2)

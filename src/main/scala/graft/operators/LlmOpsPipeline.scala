@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import LlmOps.toksRaw
 
 /** Round-2 training-data-pipeline operators: the steps that sit AROUND
   * dedup in a real corpus build — applying dedup decisions, composing the
@@ -21,8 +22,6 @@ import graft.Tables
   * the PRE-AGGREGATED one-row-per-shard table.
   */
 object LlmOpsPipeline {
-
-  private def toksRaw = split(col("text"), " ")
 
   /** Apply near-dup dedup pairwise-greedily: a document is DROPPED when it
     * has a verified near-dup with a smaller doc_id (the canonical pair
@@ -1129,7 +1128,7 @@ object LlmOpsPipeline {
       .orderBy(col("threshold").asc)
   }
 
-  /** Dedup method-agreement census (round-9 wave 16) — winnowing-
+  /** Dedup method-agreement census — winnowing-
     * fingerprint pairs vs exact blocked-Jaccard pairs as a confusion
     * census with precision/recall of the cheap method against the
     * expensive truth: the evaluation a pipeline owner runs before
@@ -1146,18 +1145,15 @@ object LlmOpsPipeline {
     * int64; ratios divide them once. */
   def llmDedupAgreement(spark: SparkSession, dir: String): DataFrame = {
     val fp = LlmOpsExtra.fpFrame(spark, dir).select("doc_id", "fp")
-    val fpPairs = fp.as("x")
-      .join(fp.as("y"),
-        col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"),
+    val fpPairs = BlockedPairs.selfPairs(fp, Seq("fp"), "doc_id")
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
         lit(1L).as("in_fp"))
     val jacPairs = LlmOps.nearDupPairs(spark, dir)
       .select(col("a_id"), col("b_id"), lit(1L).as("in_jac"))
     // outer coalesce: with ZERO candidate pairs on both sides the join is
     // empty and bare sums return NULL — the census counts must read 0
     // like the oracle's counts; precision/recall over an empty census are
-    // undefined → nullif matches the oracle's /0 NULL (round-13 tiny
-    // sweep)
+    // undefined → nullif matches the oracle's /0 NULL
     fpPairs.join(jacPairs, Seq("a_id", "b_id"), "full_outer")
       .agg(
         coalesce(sum(coalesce(col("in_fp"), lit(0L))), lit(0L)).as("fp_pairs"),

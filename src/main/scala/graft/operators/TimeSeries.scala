@@ -574,12 +574,10 @@ object TimeSeries {
       .groupBy(col("n_name"),
         (year(col("o_orderdate")) * 12 + month(col("o_orderdate"))).as("mi"))
       .agg(round(sum("o_totalprice"), 2).as("rev"))
-    val a = monthly.select(col("n_name"), col("mi").as("m1"), col("rev").as("r1"))
-    val b = monthly.select(col("n_name"), col("mi").as("m2"), col("rev").as("r2"))
-    val slopes = a.join(b, Seq("n_name")).filter(col("m1") < col("m2"))
-      .select(col("n_name"),
-        round((col("r2") - col("r1")) / (col("m2") - col("m1")), 6).as("slope"),
-        col("m1"), col("m2"))
+    val slopes = BlockedPairs.selfPairs(monthly, Seq("n_name"), "mi")
+      .select(col("a.n_name").as("n_name"),
+        round((col("b.rev") - col("a.rev")) / (col("b.mi") - col("a.mi")), 6).as("slope"),
+        col("a.mi").as("m1"), col("b.mi").as("m2"))
     val w = Window.partitionBy("n_name")
       .orderBy(col("slope").asc, col("m1").asc, col("m2").asc)
     slopes

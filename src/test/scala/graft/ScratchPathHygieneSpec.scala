@@ -20,8 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * The same grep keeps the main sources from drifting back into private
   * copies of a decision that has one owner: only GraftSession builds a
   * SparkSession, only ScratchDirs names the scratch roots, only Tables
-  * registers the fixture views, and no operator file holds a second copy
-  * of a SQL text.
+  * registers the fixture views, no operator file holds a second copy
+  * of a SQL text, and only BlockedPairs writes a blocked self-join's
+  * pair inequality.
   */
 class ScratchPathHygieneSpec extends AnyFunSuite {
 
@@ -85,6 +86,156 @@ class ScratchPathHygieneSpec extends AnyFunSuite {
       .map(c => c.map(_._2).mkString(", ") + ": " + c.head._1.linesIterator.next().trim)
     assert(twice.isEmpty,
       s"${twice.size} SQL texts are written twice:\n  " + twice.toSeq.sorted.mkString("\n  "))
+  }
+
+  /** `text` with comments and string-literal contents blanked (same
+    * length, newlines kept), so a scan sees code only. */
+  private def codeOnly(text: String): String = {
+    val out = text.toCharArray
+    var i = 0
+    def blank(from: Int, until: Int): Unit =
+      (from until math.min(until, out.length)).foreach(k => if (out(k) != '\n') out(k) = ' ')
+    def fill(from: Int, until: Int): Unit =
+      (from until until).foreach(k => if (out(k) != '\n') out(k) = '_')
+    while (i < text.length) {
+      if (text.startsWith("//", i)) {
+        val e = text.indexOf('\n', i); val end = if (e < 0) text.length else e
+        blank(i, end); i = end
+      } else if (text.startsWith("/*", i)) {
+        val end = text.indexOf("*/", i + 2) + 2; blank(i, end); i = end
+      } else if (text.startsWith("\"\"\"", i)) {
+        val end = text.indexOf("\"\"\"", i + 3); fill(i + 3, end); i = end + 3
+      } else if (text(i) == '"') {
+        var j = i + 1
+        while (text(j) != '"') j += (if (text(j) == '\\') 2 else 1)
+        fill(i + 1, j); i = j + 1
+      } else if (text(i) == '\'' && i + 2 < text.length && text(i + 2) == '\'') {
+        fill(i + 1, i + 2); i += 3
+      } else if (text.startsWith("'\\", i) && i + 3 < text.length && text(i + 3) == '\'') {
+        fill(i + 1, i + 3); i += 4
+      } else i += 1
+    }
+    new String(out)
+  }
+
+  /** A `.join(`/`.crossJoin(` in main source `code` (as `codeOnly`
+    * returns it) whose two sides are one frame, and whose condition, or
+    * the `.filter`/`.where` chained on it, holds a top-level
+    * column-vs-column `<`: "<file>:<def>" plus its line. */
+  private case class SelfPair(site: String, line: Int, statesBound: Boolean)
+
+  private def selfPairs(name: String, text: String): Seq[SelfPair] = {
+    val code = codeOnly(text)
+    def isId(c: Char) = c.isLetterOrDigit || c == '_'
+    def close(open: Int): Int = {
+      var d = 0; var i = open
+      while ({ d += (code(i) match { case '(' => 1; case ')' => -1; case _ => 0 }); d > 0 }) i += 1
+      i
+    }
+    def openOf(cl: Int): Int = {
+      var d = 0; var i = cl
+      while ({ d += (code(i) match { case ')' => 1; case '(' => -1; case _ => 0 }); d > 0 }) i -= 1
+      i
+    }
+    def skipWs(i: Int, step: Int): Int = { var j = i; while (code(j).isWhitespace) j += step; j }
+    // a frame expression read forward from `from`: its head (an object's
+    // head keeps its first member) and whether its chain joins another frame
+    def forward(from: Int, until: Int): (String, Boolean) = {
+      var i = skipWs(from, 1)
+      if (code.startsWith("broadcast(", i)) i = skipWs(i + "broadcast(".length, 1)
+      val segs = collection.mutable.ArrayBuffer.empty[String]
+      var go = true
+      while (go && i < until) {
+        val s = i; while (i < until && isId(code(i))) i += 1
+        segs += code.substring(s, i)
+        if (i < until && code(i) == '(') i = close(i) + 1
+        val n = skipWs(i, 1)
+        if (n < until && code(n) == '.') i = n + 1 else go = false
+      }
+      (head(segs.toSeq), segs.drop(1).exists(_.toLowerCase.contains("join")))
+    }
+    def head(segs: Seq[String]): String =
+      if (segs.size > 1 && segs.head.headOption.exists(_.isUpper)) segs.take(2).mkString(".")
+      else segs.headOption.getOrElse("")
+    // the frames `name` stands for at `pos`, through the file's vals
+    def frames(name: String, pos: Int): List[String] = {
+      val defs = s"\\bval\\s+$name\\s*=".r.findAllMatchIn(code).filter(_.start < pos).toSeq
+      defs.lastOption match {
+        case Some(m) =>
+          val (h, joined) = forward(m.end, code.length)
+          if (joined || h == name) List(name) else name :: frames(h, m.start)
+        case None => List(name)
+      }
+    }
+    val lt = "col\\(\"_*\"\\)\\s*<\\s*col\\(\"_*\"\\)".r
+    // top-level (paren depth 0 in the span) comparisons of two bare columns
+    def pairInequality(from: Int, until: Int): Boolean =
+      lt.findAllMatchIn(code.substring(from, until)).exists { m =>
+        val before = code.substring(from, from + m.start)
+        val next = code.substring(from + m.end, until).dropWhile(_.isWhitespace)
+        before.count(_ == '(') == before.count(_ == ')') &&
+          !next.headOption.exists("+-*/.".contains(_))
+      }
+    "\\.(join|crossJoin)\\(".r.findAllMatchIn(code).flatMap { m =>
+      val open = m.end - 1
+      val cl = close(open)
+      // receiver chain, read backward from the dot
+      var i = m.start
+      var recvHead = ""; var recvJoined = false; var headPos = i; var go = true
+      while (go) {
+        var j = skipWs(i - 1, -1)
+        if (code(j) == ')') j = skipWs(openOf(j) - 1, -1)
+        val e = j + 1; while (isId(code(j))) j -= 1
+        val seg = code.substring(j + 1, e)
+        val b = skipWs(j, -1)
+        if (code(b) == '.') { recvJoined ||= seg.toLowerCase.contains("join"); i = b }
+        else {
+          val after = code.substring(e).dropWhile(_.isWhitespace)
+          val next = if (after.startsWith(".")) after.drop(1).takeWhile(isId) else ""
+          recvHead = if (seg.headOption.exists(_.isUpper) && next.nonEmpty) s"$seg.$next" else seg
+          headPos = j + 1; go = false
+        }
+      }
+      // the right side ends at the first top-level comma of the arguments
+      var k = open + 1; var d = 0
+      while (k < cl && !(d == 0 && code(k) == ',')) {
+        d += (code(k) match { case '(' => 1; case ')' => -1; case _ => 0 }); k += 1
+      }
+      val (argHead, argJoined) = forward(open + 1, k)
+      val after = skipWs(cl + 1, 1)
+      val filter =
+        if (code.startsWith(".filter(", after) || code.startsWith(".where(", after)) {
+          val o = code.indexOf('(', after); Some((o + 1, close(o)))
+        } else None
+      val self = recvHead.nonEmpty && argHead.nonEmpty && !recvJoined && !argJoined &&
+        frames(recvHead, headPos).intersect(frames(argHead, headPos)).nonEmpty
+      if (self && (pairInequality(k, cl) || filter.exists { case (f, e) => pairInequality(f, e) })) {
+        val line = code.substring(0, m.start).count(_ == '\n') + 1
+        val headLine = code.substring(0, headPos).count(_ == '\n')
+        val enclosing = "(?m)^  (?:\\S+ )*?def\\s+(\\w+)".r.findAllMatchIn(code.substring(0, m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse("?")
+        val comment = text.linesIterator.toSeq.take(headLine).reverse
+          .takeWhile(_.trim.startsWith("//")).mkString(" ")
+        Some(SelfPair(s"$name:$enclosing", line, comment.contains("self-pair bound")))
+      } else None
+    }.toSeq
+  }
+
+  test("only BlockedPairs writes a blocked self-join's pair inequality") {
+    // every other blocked self-join keeps its own bound, stated in a
+    // "self-pair bound:" comment on the join: joinThetaBand explodes only
+    // its left side into three size buckets, so candidates stay within a
+    // constant factor of the output; aggKendall pairs 25 broadcast rows
+    val allowed = Set("JoinsAdvanced.scala:joinThetaBand", "Aggregates.scala:aggKendall")
+    val found = sources("src/main/scala").filterNot(_._1 == "BlockedPairs.scala")
+      .flatMap { case (name, text) => selfPairs(name, text) }
+    val outside = found.filterNot(p => allowed(p.site) && p.statesBound)
+    assert(outside.isEmpty,
+      s"${outside.size} blocked self-joins write their own pair inequality; " +
+        "route them through BlockedPairs.selfPairs:\n  " +
+        outside.map(p => s"${p.site} (line ${p.line})").mkString("\n  "))
+    assert(allowed.subsetOf(found.map(_.site).toSet),
+      s"an allowlisted site no longer self-joins; drop it from the list: ${found.map(_.site)}")
   }
 
   test("only ScratchDirs names the scratch roots in the main sources") {

@@ -1,19 +1,20 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import graft.operators.BlockedPairs
 
-/** Skew canary for the dedup family's candidate-pair stage (round-3
-  * verdict ask #6): a future edit that regresses pair generation back to
-  * a low-cardinality block-key self-join must fail a test the way plan
-  * drift does. Four guards:
-  *   1. the triangle-salted pair set is EXACTLY the plain blocked pair
-  *      set (the oracles keep the plain formulation, so this is the
-  *      correctness contract);
-  *   2. the pair set is invariant under input partitioning (salts depend
-  *      only on ids);
+/** Skew canary for the blocked candidate-pair stage: pairs within a
+  * low-cardinality block key must stay spread over many join keys, so an
+  * edit that regresses the salted sites back to a plain block-key
+  * self-join fails a test the way plan drift does. Four guards:
+  *   1. BlockedPairs' plain and triangle-salted forms both give EXACTLY
+  *      the hand-written blocked self-join's pair set (the oracles keep
+  *      that formulation, so this is the correctness contract);
+  *   2. each pair set is invariant under input partitioning (salts
+  *      depend only on ids);
   *   3. no single join key owns more than a bounded share of the
   *      candidate-enumeration work — and the bound is far below the
   *      hottest BLOCK's share, which is what an unsalted join would put
@@ -31,25 +32,21 @@ class SkewCanarySpec extends AnyFunSuite {
 
   test("salted pairs = plain blocked pairs, and survive repartitioning") {
     val d = blocks
-    val naive = d.as("a").join(d.as("b"),
-        col("a.lang") === col("b.lang") && col("a.band") === col("b.band") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id"), col("b.id"))
+    def ids(pairs: DataFrame) = pairs.select(col("a.id"), col("b.id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val salted = BlockedPairs.saltedSelfPairs(d, Seq("lang", "band"))
-      .select(col("a.id"), col("b.id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(salted === naive)
-    assert(salted.forall { case (a, b) => a < b })
-    val reparted = BlockedPairs.saltedSelfPairs(d.repartition(7), Seq("lang", "band"))
-      .select(col("a.id"), col("b.id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(reparted === naive)
+    val naive = ids(d.as("a").join(d.as("b"),
+      col("a.lang") === col("b.lang") && col("a.band") === col("b.band") &&
+        col("a.id") < col("b.id")))
+    for (salted <- Seq(false, true); (input, parts) <- Seq(d -> "as read", d.repartition(7) -> "7")) {
+      val pairs = ids(BlockedPairs.selfPairs(input, Seq("lang", "band"), "id",
+        salted = salted))
+      assert(pairs === naive, s"salted=$salted, partitions $parts")
+      assert(pairs.forall { case (a, b) => a < b })
+    }
   }
 
   test("no join key owns more than a bounded share of candidate work") {
-    val (lhs, rhs) = BlockedPairs.saltedSides(blocks, Seq("lang", "band"),
-      BlockedPairs.DefaultShards)
+    val (lhs, rhs) = BlockedPairs.saltedSides(blocks, Seq("lang", "band"), "id")
     val l = lhs.groupBy("l_lang", "l_band", "bi", "bj").agg(count(lit(1)).as("ln"))
     val r = rhs.groupBy("r_lang", "r_band", "ci", "cj").agg(count(lit(1)).as("rn"))
     val work = l.join(r,
