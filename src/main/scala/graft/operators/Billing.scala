@@ -200,96 +200,44 @@ object Billing {
       .orderBy(col("yr").asc)
   }
 
-  /** The reference's OWN dataflow as ONE composed declared query: the
-    * [inferred] billing-loader loop — `fetch CSV → normalize → dedupe →
-    * partitioned idempotent insert → verify` (SURVEY §3.1). Each stage
-    * also has its own query (`ingest_csv`, `proj_derive`,
-    * `llm_dedup_exact`/`stream_dedup`, `sink_idempotent`); this one gives
-    * an oracle row to a bug that only shows ACROSS the seams (schema
-    * drift between normalize and the sink, a dedup key that doesn't
-    * survive the text round-trip, a partition column derived differently
-    * than the re-delivery filter). It runs the composition end-to-end:
+  /** The reference's own dataflow as one composed declared query, the
+    * billing-loader loop `fetch CSV → normalize → dedupe → partitioned
+    * idempotent insert → verify` (SURVEY §3.1). Each stage also has its
+    * own query (`ingest_csv`, `proj_derive`, `llm_dedup_exact`,
+    * `sink_idempotent`); this one gives an oracle row to a bug that shows
+    * only across the seams: schema drift between normalize and the sink,
+    * a dedup key that does not survive the text round-trip, a partition
+    * column derived differently from the re-delivery filter.
     *
-    *  1. INGEST — the upstream drop is the text-format-safe lineitem
-    *     projection staged as CSV **with a 10% duplicate re-delivery**
-    *     (every okey % 10 == 0 row arrives twice — the at-least-once
-    *     delivery the reference's timer loop tolerates), re-read with an
-    *     EXPLICIT schema (never inferSchema at scale);
-    *  2. NORMALIZE — derive the `month` partition key from the shipped
-    *     timestamp text and the 2dp `gross` line amount (qty × price);
-    *  3. DEDUPE — exact CONTENT dedup on the full delivered record (the
-    *     llm_dedup_exact semantics — a re-delivered line is
-    *     byte-identical, and the fixture's (okey, line) pair is NOT a
-    *     unique business key, so the record itself is the idempotency
-    *     key; production hashes it to one xxhash64 column first). All
-    *     duplicates being full-row identical makes dropDuplicates'
-    *     survivor pick deterministic;
-    *  4. LAND — month-partitioned parquet, then ONE month re-delivered
-    *     under dynamic partition overwrite (the reference's idempotent
-    *     re-load contract, exercised against the same sink the first
-    *     write produced);
-    *  5. VERIFY — the month-grain census over the sink READ-BACK.
+    *  1. INGEST — the text-safe lineitem record (`exportProjection`) is
+    *     staged as CSV with every `okey % 10 == 0` row delivered twice
+    *     (at-least-once delivery) and read back with its own schema;
+    *  2. NORMALIZE + DEDUPE — exact dedup on the full delivered record
+    *     (a re-delivered line is byte-identical, and (okey, line) is not
+    *     a unique business key, so the record itself is the idempotency
+    *     key), then the `month` partition key from the ship text and the
+    *     2dp `gross` amount;
+    *  3. LAND — month-partitioned parquet, then month `1996-03`
+    *     re-delivered under dynamic partition overwrite
+    *     (`SourcesSinks.loadIdempotent` owns both writes and the
+    *     read-back);
+    *  4. VERIFY — the month-grain census over the sink read-back.
     *
-    * The DuckDB oracle computes the same census DIRECTLY over the source
-    * parquet: equality proves no seam lost, duplicated, or mangled a row
-    * — the ingest_csv lossless-round-trip trick extended across all four
-    * seams. BillPipelineE2eSpec additionally pins run-twice idempotency.
-    *
-    * Scale shape: every stage is the declared stage's plan — parallel
-    * text encode/parse, map-side month derivation, one hash-agg-shaped
-    * dedup shuffle on the business key, one partition-colocated write
-    * (repartition(month) ⇒ one file per partition), and the re-delivery
-    * rewrites exactly one partition dir. In production the re-delivery
-    * reads only the re-delivered file; here it re-filters the staged
-    * frame (same rows, fixture-scale convenience). */
+    * The DuckDB oracle computes the same census directly over the source
+    * parquet, so equality means no seam lost, duplicated or mangled a
+    * row. BillPipelineE2eSpec pins run-twice idempotency and the three
+    * writes. */
   def billPipelineE2e(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val out = SourcesSinks.scratchFor(dir, "e2e")
-    val proj = Tables.lineitem(spark, dir).select(
-      col("l_orderkey").as("okey"),
-      col("l_linenumber").as("line"),
-      col("l_returnflag").as("flag"),
-      round(col("l_quantity"), 2).as("qty"),
-      round(col("l_extendedprice"), 2).as("price"),
-      date_format(col("l_shipdate"), "yyyy-MM-dd HH:mm:ss").as("ship"))
-    proj.unionAll(proj.filter(col("okey") % 10 === 0)) // re-deliver 10%
-      .repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").option("header", "true").csv(s"$out/csv")
-    val schema = StructType(Seq(
-      StructField("okey", LongType), StructField("line", IntegerType),
-      StructField("flag", StringType), StructField("qty", DoubleType),
-      StructField("price", DoubleType), StructField("ship", StringType)))
-    // normalize + dedup as a function of the delivered frame, so the
-    // re-delivery below can apply its month predicate AT THE SOURCE,
-    // before the shuffle: the month is a
-    // pure per-record function of `ship` and the dedup key is the FULL
-    // record, so filter-then-dedup ≡ dedup-then-filter row for row, and
-    // the re-delivery's dedup shuffle carries one month's rows instead
-    // of the whole drop (production re-reads only the re-delivered
-    // files anyway — this makes the fixture-scale plan match that).
-    def normalize(df: DataFrame): DataFrame = df
-      .dropDuplicates("okey", "line", "flag", "qty", "price", "ship")
-      .withColumn("month", substring(col("ship"), 1, 7))
-      .withColumn("gross", round(col("qty") * col("price"), 2))
-    val delivered = spark.read.schema(schema)
-      .option("header", "true").csv(s"$out/csv")
-    val clean = normalize(delivered)
-    // SIZE-DERIVED partition count for the dedup shuffle + landing write:
-    // the staged drop's measured bytes (CSV text
-    // ≈ its in-flight row width) decide how many tasks the dedup exchange
-    // and the month-colocating repartition get, clamped to the session
-    // conf — at 10×/100× the count rises back to the configured value.
-    val nParts = MemoFrames.scaleParts(spark, delivered, 1.0)
-    MemoFrames.withShufflePartitions(spark, nParts) {
-      clean.repartition(col("month"))
-        .write.mode("overwrite").partitionBy("month").parquet(s"$out/sink")
-      normalize(delivered.filter(substring(col("ship"), 1, 7) === "1996-03"))
-        .repartition(col("month")) // re-deliver one month
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("month").parquet(s"$out/sink")
-    }
-    spark.read.schema(clean.schema).parquet(s"$out/sink")
-      .groupBy("month")
+    val records = SourcesSinks.exportProjection(spark, dir)
+    val delivered = SourcesSinks.stageText(
+      records.unionAll(records.filter(col("okey") % 10 === 0)), "csv", s"$out/csv")
+    val month = substring(col("ship"), 1, 7)
+    SourcesSinks.loadIdempotent(delivered, s"$out/sink", "month", month, "1996-03") {
+      _.dropDuplicates("okey", "line", "flag", "qty", "price", "ship")
+        .withColumn("month", month)
+        .withColumn("gross", round(col("qty") * col("price"), 2))
+    }.groupBy("month")
       .agg(count(lit(1)).as("n"),
         countDistinct(col("okey")).as("orders"),
         round(sum("qty"), 2).as("sum_qty"),

@@ -69,7 +69,7 @@ object LlmOps {
     * the declared query's global sort would cost a range-sample job
     * plus a sort exchange only to be destroyed one step later. */
   private[graft] def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.MemoFrames.frame(spark, s"neardup_pairs|$dir")(
+    MemoFrames.frame(spark, s"neardup_pairs|$dir")(
       nearDupPairsBuild(spark, dir))
 
   private[graft] def nearDupPairsBuild(spark: SparkSession, dir: String): DataFrame = {

@@ -1243,16 +1243,15 @@ object LlmOpsExtra {
       .select(col("doc_id"), explode(transform(sequence(lit(1), size(col("toks")) - 1),
         i => concat_ws(" ", element_at(col("toks"), i), element_at(col("toks"), i + 1)))).as("bg"))
       .distinct()
-    val sizes = bigrams.groupBy("doc_id").agg(count(lit(1)).as("nb"))
-    val inter = pairs
-      .join(bigrams.select(col("doc_id").as("a"), col("bg")), "a")
-      .join(bigrams.select(col("doc_id").as("b"), col("bg")), Seq("b", "bg"))
-      .groupBy("a", "b").agg(count(lit(1)).as("inter"))
+    // each of a's distinct bigrams meets at most one equal b bigram, so
+    // per pair the a-side rows count a's set size and the matches count
+    // the intersection; a pair whose a has no bigram has no set to score
     pairs
-      .join(inter, Seq("a", "b"), "left")
-      .join(sizes.select(col("doc_id").as("a"), col("nb").as("na")), "a")
-      .join(sizes.select(col("doc_id").as("b"), col("nb").as("nb")), "b")
-      .withColumn("inter", coalesce(col("inter"), lit(0L)))
+      .join(bigrams.select(col("doc_id").as("a"), col("bg")), "a")
+      .join(bigrams.select(col("doc_id").as("b"), col("bg"), lit(1).as("hit")),
+        Seq("b", "bg"), "left")
+      .groupBy("a", "b").agg(count(col("hit")).as("inter"), count(lit(1)).as("na"))
+      .join(bigrams.groupBy(col("doc_id").as("b")).agg(count(lit(1)).as("nb")), "b")
       .select(col("a"), col("b"), col("inter"), col("na"), col("nb"),
         round(col("inter").cast("double") / col("na"), 6).as("rouge2_p"),
         round(col("inter").cast("double") / col("nb"), 6).as("rouge2_r"),
@@ -1266,7 +1265,7 @@ object LlmOpsExtra {
     * and llm_index_stats' health report. See llmBm25Retrieve for the
     * index-persists-len/df rationale. */
   private[operators] def bm25Post(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.MemoFrames.frame(spark, s"bm25_post|$dir") {
+    MemoFrames.frame(spark, s"bm25_post|$dir") {
       val wd = Window.partitionBy("doc_id")
       val wt = Window.partitionBy("tok")
       Tables.documents(spark, dir)

@@ -200,93 +200,56 @@ object LlmOpsPipeline {
       .orderBy(col("lang").asc)
   }
 
-  /** The TRAINING-CORPUS BUILD as ONE composed declared query (round 16 —
-    * the `bill_pipeline_e2e` treatment applied to the LLM-pipeline side):
-    * every stage has passed individually since round 2 (`ingest_json`,
-    * `llm_heuristic_filter`, `llm_dedup_exact`, `sink_partitioned`,
-    * `llm_pack`), but a bug that only manifests ACROSS the seams — a
-    * tokenization that doesn't survive the text round-trip, a filter
-    * predicate drifting between the staged and landed schema, a dedup key
-    * that misses re-deliveries, a partition column interacting with the
-    * pack order — had no oracle row. This query runs the corpus build
-    * end-to-end:
+  /** The training-corpus build as one composed declared query, the
+    * `bill_pipeline_e2e` shape on the LLM-pipeline side. Each stage also
+    * has its own query (`ingest_json`, `llm_heuristic_filter`,
+    * `llm_dedup_exact`, `sink_partitioned`, `llm_pack`); this one gives an
+    * oracle row to a bug that shows only across the seams: a tokenization
+    * that does not survive the text round-trip, a filter predicate
+    * drifting between the staged and landed schema, a dedup key that
+    * misses re-deliveries, a partition column interacting with the pack
+    * order.
     *
-    *  1. INGEST — the upstream drop staged as JSONL (THE training-corpus
-    *     interchange format — text survives arbitrary unicode/newlines
-    *     via JSON escaping, where CSV would mangle it) **with a 10%
-    *     duplicate re-delivery** (every doc_id % 10 == 0 doc arrives
-    *     twice — at-least-once delivery), re-read with an EXPLICIT
-    *     schema (never inferSchema at scale);
-    *  2. FILTER — the C4/Gopher heuristic quality gate
+    *  1. INGEST — the documents staged as JSONL (text survives arbitrary
+    *     unicode and newlines through JSON escaping, where CSV would
+    *     mangle it) with every `doc_id % 10 == 0` doc delivered twice,
+    *     read back with its own schema;
+    *  2. FILTER + DEDUPE — the C4/Gopher heuristic quality gate
     *     (`llm_heuristic_filter`'s pass predicate: ≥30 tokens, mean
-    *     token length in [3, 8], has stopwords) BEFORE the dedup
-    *     shuffle, so only survivors pay it;
-    *  3. DEDUPE — exact content dedup on the full delivered record (a
-    *     re-delivered doc is byte-identical; doc_id disambiguates
-    *     legitimate same-text docs, so the survivor pick is
-    *     deterministic);
-    *  4. LAND — lang-partitioned parquet, then ONE lang re-delivered
-    *     under dynamic partition overwrite (the idempotent re-load
-    *     contract, against the same sink the first write produced);
-    *  5. PACK + CENSUS — the GPT-style 2048-token packing (llm_pack's
-    *     sharded-cumsum shape) over the sink READ-BACK, reported as the
-    *     per-lang dataset card: docs, distinct sources, contexts, total
-    *     tokens, average fill.
+    *     token length in [3, 8], has stopwords) before the dedup shuffle,
+    *     so only survivors pay it; then exact dedup on the full delivered
+    *     record (doc_id disambiguates same-text docs, so the survivor
+    *     pick is deterministic);
+    *  3. LAND — lang-partitioned parquet, then lang `en` re-delivered
+    *     under dynamic partition overwrite (`SourcesSinks.loadIdempotent`
+    *     owns both writes and the read-back);
+    *  4. PACK + CENSUS — the 2048-token packing (llm_pack's sharded
+    *     cumsum: per-(lang, shard) windows plus a one-row-per-shard offset
+    *     table, no per-lang global window) over the read-back, reported
+    *     as the per-lang dataset card: docs, distinct sources, contexts,
+    *     total tokens, average fill.
     *
-    * The DuckDB oracle computes the same card DIRECTLY over the source
-    * parquet with only the filter applied: equality proves the JSONL
-    * round-trip was lossless, the dedup removed exactly the injected
-    * re-deliveries, the re-loaded lang didn't double, and the pack saw
-    * the same doc_id order through the partitioned sink.
-    * LlmPipelineE2eSpec pins run-twice idempotency and the dedup count.
-    *
-    * Scale shape: each stage keeps its declared stage's plan — parallel
-    * JSONL encode/parse, map-side filter, ONE hash-shuffle dedup on the
-    * record key, a partition-colocated write (repartition(lang) ⇒ one
-    * file per partition), and the sharded pack cumsum (per-(lang, shard)
-    * windows + a one-row-per-shard offset table — no per-lang global
-    * window). The empty-corpus edge (a crafted sweep where every doc
-    * fails the filter) lands an empty sink whose read-back carries the
-    * explicit schema, so the census is an empty frame, not an error. */
+    * The DuckDB oracle computes the same card directly over the source
+    * parquet with only the filter applied, so equality means the JSONL
+    * round-trip was lossless, the dedup removed exactly the re-deliveries,
+    * the re-loaded lang did not double, and the pack saw the same doc_id
+    * order through the partitioned sink. A corpus where every doc fails
+    * the filter lands an empty sink whose read-back carries the cleaned
+    * schema, so the card is an empty frame, not an error.
+    * LlmPipelineE2eSpec pins run-twice idempotency and the dedup count. */
   def llmPipelineE2e(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val out = SourcesSinks.scratchFor(dir, "llm_e2e")
-    val proj = Tables.documents(spark, dir)
+    val records = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("source"), col("text"), col("n_chars"))
-    proj.unionAll(proj.filter(col("doc_id") % 10 === 0)) // re-deliver 10%
-      .repartition(spark.sparkContext.defaultParallelism)
-      .write.mode("overwrite").json(s"$out/jsonl")
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("lang", StringType),
-      StructField("source", StringType), StructField("text", StringType),
-      StructField("n_chars", LongType)))
-    val raw = spark.read.schema(schema).json(s"$out/jsonl")
+    val delivered = SourcesSinks.stageText(
+      records.unionAll(records.filter(col("doc_id") % 10 === 0)), "json", s"$out/jsonl")
     val ntokD = size(toksRaw).cast("double")
     val avgLen = (col("n_chars").cast("double") - (ntokD - 1)) / ntokD
     val nstop = size(filter(toksRaw, t => t === "the" || t === "a"))
-    // quality gate + dedup as a function of the delivered frame (round
-    // 17, guide §2.3 — same re-delivery pushdown as billPipelineE2e):
-    // `lang` is both the partition key AND a dedup key, so filtering the
-    // re-delivered lang at the SOURCE commutes with the per-row quality
-    // gate and the full-record dedup — the re-delivery's dedup shuffle
-    // carries one lang instead of the whole corpus, matching the
-    // production shape (a lang re-delivery re-reads that lang's files).
-    def qualityDedup(df: DataFrame): DataFrame = df
-      .filter(!(ntokD < 30) && !(avgLen < 3.0 || avgLen > 8.0) && !(nstop === 0))
-      .dropDuplicates("doc_id", "lang", "source", "text", "n_chars")
-    val clean = qualityDedup(raw)
-    // size-derived dedup/landing partition count — same rationale and
-    // clamp as billPipelineE2e (round 17, guide §2)
-    MemoFrames.withShufflePartitions(spark, MemoFrames.scaleParts(spark, raw, 1.0)) {
-      clean.repartition(col("lang"))
-        .write.mode("overwrite").partitionBy("lang").parquet(s"$out/sink")
-      qualityDedup(raw.filter(col("lang") === "en")) // re-deliver one lang
-        .repartition(col("lang"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("lang").parquet(s"$out/sink")
-    }
-    val base = spark.read.schema(clean.schema).parquet(s"$out/sink")
-      .select(col("doc_id"), col("lang"), col("source"),
+    val base = SourcesSinks.loadIdempotent(delivered, s"$out/sink", "lang", col("lang"), "en") {
+      _.filter(!(ntokD < 30) && !(avgLen < 3.0 || avgLen > 8.0) && !(nstop === 0))
+        .dropDuplicates("doc_id", "lang", "source", "text", "n_chars")
+    }.select(col("doc_id"), col("lang"), col("source"),
         size(toksRaw).cast("bigint").as("ntok"),
         expr("doc_id DIV 256").as("shard"))
     val wOff = Window.partitionBy("lang").orderBy(col("shard").asc)

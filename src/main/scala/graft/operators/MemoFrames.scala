@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Per-(session, key) memoization of expensive shared frames as PARQUET
   * files, in place of `.checkpoint()` plus a map of DataFrames.
@@ -34,10 +35,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object MemoFrames {
 
-  /** session → (key → parquet path, plus the "" entry holding the session's
-    * base dir). Values are strings only — see the leak note above. */
-  private val cache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, String]]()
+  /** session → (key → (parquet path, the writer's schema)), plus the ""
+    * entry holding the session's base dir. A staged directory and the
+    * base dir keep an empty schema. Values hold no DataFrame — see the
+    * leak note above. */
+  private type Entries = scala.collection.mutable.Map[String, (String, StructType)]
+  private val cache = new java.util.WeakHashMap[SparkSession, Entries]()
 
   private val cleaner = java.lang.ref.Cleaner.create()
 
@@ -52,23 +55,14 @@ object MemoFrames {
     def run(): Unit = ScratchDirs.deleteRecursively(new java.io.File(path))
   }
 
-  private def entriesFor(spark: SparkSession): scala.collection.mutable.Map[String, String] = {
+  private def entriesFor(spark: SparkSession): Entries = {
     ScratchDirs.touch(ScratchDirs.memoDir)
     cache.computeIfAbsent(spark, { s =>
       val dir = java.nio.file.Files.createTempDirectory(ScratchDirs.memoDir.toPath, "session_")
       cleaner.register(s, new DeleteDir(dir.toString))
-      scala.collection.mutable.Map("" -> dir.toString)
+      scala.collection.mutable.Map("" -> (dir.toString, new StructType()))
     })
   }
-
-  /** Path → schema: the memo file is written exactly once, so its schema
-    * is immutable for the JVM lifetime. A schema-less `spark.read.parquet`
-    * schedules a footer-inference JOB per consumer call; with the schema
-    * captured from the frame that was just written, every warm-path read
-    * plans without touching the cluster (same job-count rationale as
-    * Tables.schemaCache). */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
   /** The SHARED memo keys (frame/stagedPath — not per-call materialize
     * tags) this session has built so far. Read-only: an absent session
@@ -86,24 +80,21 @@ object MemoFrames {
   def frame(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
     synchronized {
       val entries = entriesFor(spark)
-      val path = entries.getOrElse(key, {
+      val (path, schema) = entries.getOrElseUpdate(key, {
         val safe = key.replaceAll("[^A-Za-z0-9._-]", "_").take(64)
         // a session-unique counter rides in the path: memoization is by the
         // EXACT key in `entries`, so the path needs no key fidelity —
         // but two distinct keys colliding on (64-char prefix, 32-bit
         // hashCode) must never share a directory
-        val p = s"${entries("")}/${safe}_${Integer.toHexString(key.hashCode)}_${matCtr.incrementAndGet()}"
+        val p = s"${entries("")._1}/${safe}_${Integer.toHexString(key.hashCode)}_${matCtr.incrementAndGet()}"
         val df = build
         writeNoAqe(df, p)
         // The writer's own schema: it produced the file, so its (non-)
         // nullability assertions hold for the data by construction, and
         // reusing it avoids the footer-inference JOB a schema-less read
         // schedules on every call.
-        schemaCache.put(p, df.schema)
-        entries(key) = p
-        p
+        (p, df.schema)
       })
-      val schema = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
       spark.read.schema(schema).parquet(path)
     }
 
@@ -122,9 +113,7 @@ object MemoFrames {
 
   private def supersedeMat(spark: SparkSession, tag: String, newPath: String): Unit = {
     val m = liveMat.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
-    m.get(tag).foreach { old =>
-      schemaCache.remove(old); ScratchDirs.deleteRecursively(new java.io.File(old))
-    }
+    m.get(tag).foreach(old => ScratchDirs.deleteRecursively(new java.io.File(old)))
     m(tag) = newPath
   }
 
@@ -158,9 +147,8 @@ object MemoFrames {
       expand: Double = 1.0): DataFrame =
     synchronized {
       val safe = tag.replaceAll("[^A-Za-z0-9._-]", "_").take(48)
-      val p = s"${entriesFor(spark)("")}/mat_${safe}_${matCtr.incrementAndGet()}"
+      val p = s"${entriesFor(spark)("")._1}/mat_${safe}_${matCtr.incrementAndGet()}"
       writeNoAqe(df, p, expand)
-      schemaCache.put(p, df.schema)
       supersedeMat(spark, safe, p)
       spark.read.schema(df.schema).parquet(p)
     }
@@ -180,9 +168,8 @@ object MemoFrames {
   def materializeCounted(spark: SparkSession, tag: String,
       df: DataFrame): (DataFrame, Long) = synchronized {
     val safe = tag.replaceAll("[^A-Za-z0-9._-]", "_").take(48)
-    val p = s"${entriesFor(spark)("")}/mat_${safe}_${matCtr.incrementAndGet()}"
+    val p = s"${entriesFor(spark)("")._1}/mat_${safe}_${matCtr.incrementAndGet()}"
     writeNoAqe(df, p)
-    schemaCache.put(p, df.schema)
     supersedeMat(spark, safe, p)
     val conf = spark.sparkContext.hadoopConfiguration
     val path = new org.apache.hadoop.fs.Path(p)
@@ -220,14 +207,13 @@ object MemoFrames {
   def stagedPath(spark: SparkSession, key: String)(write: String => Unit): String =
     synchronized {
       val entries = entriesFor(spark)
-      entries.getOrElse(key, {
+      entries.getOrElseUpdate(key, {
         val safe = key.replaceAll("[^A-Za-z0-9._-]", "_").take(64)
         // counter for the same collision-proofing as `frame` above
-        val p = s"${entries("")}/stage_${safe}_${Integer.toHexString(key.hashCode)}_${matCtr.incrementAndGet()}"
+        val p = s"${entries("")._1}/stage_${safe}_${Integer.toHexString(key.hashCode)}_${matCtr.incrementAndGet()}"
         write(p)
-        entries(key) = p
-        p
-      })
+        (p, new StructType())
+      })._1
     }
 
   /** Write `df` with AQE off and a size-derived partition count. The memo

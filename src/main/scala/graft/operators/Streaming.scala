@@ -140,14 +140,10 @@ object Streaming {
     val staged = Tables.events(spark, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"),
         date_format(col("ts"), "yyyy-MM-dd").as("day"))
-    val p = MemoFrames.stagedPath(spark, s"stream_incr_drop:$dir") { path =>
-      staged
-        // co-locate each day before the partitioned write: one file per day
-        // dir instead of a fragment from every write task, each of which
-        // the streaming source would list and open
-        .repartition(col("day"))
-        .write.mode("overwrite").partitionBy("day").parquet(path)
-    }
+    // one file per day dir, so the streaming source lists and opens one
+    // file per day, not a fragment from every write task
+    val p = MemoFrames.stagedPath(spark, s"stream_incr_drop:$dir")(
+      SourcesSinks.landPartitioned(staged, "day", _))
     (p, staged.schema)
   }
 

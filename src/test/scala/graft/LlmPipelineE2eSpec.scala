@@ -3,15 +3,15 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** `llm_pipeline_e2e` (round 16): the training-corpus build composed —
-  * JSONL ingest (with duplicate re-delivery) → heuristic quality filter →
+/** `llm_pipeline_e2e`: the training-corpus build composed — JSONL
+  * ingest (with duplicate re-delivery) → heuristic quality filter →
   * exact content dedup → lang-partitioned idempotent landing → pack +
   * dataset-card census over the read-back. The DuckDB oracle checks the
-  * card against the filtered source; this suite pins the properties the
-  * oracle equality rides on: the card survives a FULL double-run
-  * (overwrite semantics at every seam), and the dedup stage actually
-  * removed the manufactured re-deliveries (doc counts match the filtered
-  * source, not the inflated drop).
+  * card against the filtered source; this suite pins what the oracle
+  * equality rides on: the card survives a FULL double-run (overwrite
+  * semantics at every seam), the dedup stage removed the manufactured
+  * re-deliveries (doc counts match the filtered source, not the inflated
+  * drop), and multibyte text crosses the JSONL seam byte for byte.
   */
 class LlmPipelineE2eSpec extends AnyFunSuite {
   import TestSpark._

@@ -21,8 +21,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * copies of a decision that has one owner: only GraftSession builds a
   * SparkSession, only ScratchDirs names the scratch roots, only Tables
   * registers the fixture views, no operator file holds a second copy
-  * of a SQL text, and only BlockedPairs writes a blocked self-join's
-  * pair inequality.
+  * of a SQL text, only BlockedPairs writes a blocked self-join's pair
+  * inequality, and only SourcesSinks lands partitioned parquet.
   */
 class ScratchPathHygieneSpec extends AnyFunSuite {
 
@@ -89,14 +89,15 @@ class ScratchPathHygieneSpec extends AnyFunSuite {
   }
 
   /** `text` with comments and string-literal contents blanked (same
-    * length, newlines kept), so a scan sees code only. */
-  private def codeOnly(text: String): String = {
+    * length, newlines kept), so a scan sees code only; with `strings`,
+    * string literals are kept. */
+  private def codeOnly(text: String, strings: Boolean = false): String = {
     val out = text.toCharArray
     var i = 0
     def blank(from: Int, until: Int): Unit =
       (from until math.min(until, out.length)).foreach(k => if (out(k) != '\n') out(k) = ' ')
     def fill(from: Int, until: Int): Unit =
-      (from until until).foreach(k => if (out(k) != '\n') out(k) = '_')
+      if (!strings) (from until until).foreach(k => if (out(k) != '\n') out(k) = '_')
     while (i < text.length) {
       if (text.startsWith("//", i)) {
         val e = text.indexOf('\n', i); val end = if (e < 0) text.length else e
@@ -124,20 +125,42 @@ class ScratchPathHygieneSpec extends AnyFunSuite {
     * column-vs-column `<`: "<file>:<def>" plus its line. */
   private case class SelfPair(site: String, line: Int, statesBound: Boolean)
 
-  private def selfPairs(name: String, text: String): Seq[SelfPair] = {
-    val code = codeOnly(text)
-    def isId(c: Char) = c.isLetterOrDigit || c == '_'
-    def close(open: Int): Int = {
-      var d = 0; var i = open
-      while ({ d += (code(i) match { case '(' => 1; case ')' => -1; case _ => 0 }); d > 0 }) i += 1
-      i
-    }
+  private def isId(c: Char) = c.isLetterOrDigit || c == '_'
+
+  private def skipWs(code: String, i: Int, step: Int): Int = {
+    var j = i; while (code(j).isWhitespace) j += step; j
+  }
+
+  /** The receiver chain of the call whose dot is at `dot` in `code`, read
+    * backward: its segment names from the nearest call to the head, and
+    * the head's position. */
+  private def receiverChain(code: String, dot: Int): (Seq[String], Int) = {
     def openOf(cl: Int): Int = {
       var d = 0; var i = cl
       while ({ d += (code(i) match { case ')' => 1; case '(' => -1; case _ => 0 }); d > 0 }) i -= 1
       i
     }
-    def skipWs(i: Int, step: Int): Int = { var j = i; while (code(j).isWhitespace) j += step; j }
+    val segs = collection.mutable.ArrayBuffer.empty[String]
+    var i = dot; var headPos = -1
+    while (headPos < 0) {
+      var j = skipWs(code, i - 1, -1)
+      if (code(j) == ')') j = skipWs(code, openOf(j) - 1, -1)
+      val e = j + 1; while (isId(code(j))) j -= 1
+      segs += code.substring(j + 1, e)
+      val b = skipWs(code, j, -1)
+      if (code(b) == '.') i = b else headPos = j + 1
+    }
+    (segs.toSeq, headPos)
+  }
+
+  private def selfPairs(name: String, text: String): Seq[SelfPair] = {
+    val code = codeOnly(text)
+    def close(open: Int): Int = {
+      var d = 0; var i = open
+      while ({ d += (code(i) match { case '(' => 1; case ')' => -1; case _ => 0 }); d > 0 }) i += 1
+      i
+    }
+    def skipWs(i: Int, step: Int): Int = ScratchPathHygieneSpec.this.skipWs(code, i, step)
     // a frame expression read forward from `from`: its head (an object's
     // head keeps its first member) and whether its chain joins another frame
     def forward(from: Int, until: Int): (String, Boolean) = {
@@ -180,22 +203,12 @@ class ScratchPathHygieneSpec extends AnyFunSuite {
       val open = m.end - 1
       val cl = close(open)
       // receiver chain, read backward from the dot
-      var i = m.start
-      var recvHead = ""; var recvJoined = false; var headPos = i; var go = true
-      while (go) {
-        var j = skipWs(i - 1, -1)
-        if (code(j) == ')') j = skipWs(openOf(j) - 1, -1)
-        val e = j + 1; while (isId(code(j))) j -= 1
-        val seg = code.substring(j + 1, e)
-        val b = skipWs(j, -1)
-        if (code(b) == '.') { recvJoined ||= seg.toLowerCase.contains("join"); i = b }
-        else {
-          val after = code.substring(e).dropWhile(_.isWhitespace)
-          val next = if (after.startsWith(".")) after.drop(1).takeWhile(isId) else ""
-          recvHead = if (seg.headOption.exists(_.isUpper) && next.nonEmpty) s"$seg.$next" else seg
-          headPos = j + 1; go = false
-        }
-      }
+      val (segs, headPos) = receiverChain(code, m.start)
+      val recvJoined = segs.init.exists(_.toLowerCase.contains("join"))
+      val seg = segs.last
+      val rest = code.substring(headPos + seg.length).dropWhile(_.isWhitespace)
+      val next = if (rest.startsWith(".")) rest.drop(1).takeWhile(isId(_)) else ""
+      val recvHead = if (seg.headOption.exists(_.isUpper) && next.nonEmpty) s"$seg.$next" else seg
       // the right side ends at the first top-level comma of the arguments
       var k = open + 1; var d = 0
       while (k < cl && !(d == 0 && code(k) == ',')) {
@@ -236,6 +249,24 @@ class ScratchPathHygieneSpec extends AnyFunSuite {
         outside.map(p => s"${p.site} (line ${p.line})").mkString("\n  "))
     assert(allowed.subsetOf(found.map(_.site).toSet),
       s"an allowlisted site no longer self-joins; drop it from the list: ${found.map(_.site)}")
+  }
+
+  test("only SourcesSinks lands partitioned parquet") {
+    // a writer's `.partitionBy(` (its receiver chain holds `.write`; a
+    // `Window.partitionBy` does not) or a dynamic-overwrite option outside
+    // SourcesSinks is a second copy of the loader's landing seam
+    val found = sources("src/main/scala").filterNot(_._1 == "SourcesSinks.scala")
+      .flatMap { case (name, text) =>
+        val code = codeOnly(text)
+        val writes = "\\.partitionBy\\(".r.findAllMatchIn(code).map(_.start)
+          .filter(i => receiverChain(code, i)._1.exists(_.startsWith("write")))
+        val modes = "partitionOverwriteMode".r.findAllMatchIn(codeOnly(text, strings = true))
+          .map(_.start)
+        (writes ++ modes).map(i => s"$name:${code.substring(0, i).count(_ == '\n') + 1}")
+      }
+    assert(found.isEmpty,
+      "land partitioned parquet through SourcesSinks.landPartitioned or " +
+        "loadIdempotent:\n  " + found.mkString("\n  "))
   }
 
   test("only ScratchDirs names the scratch roots in the main sources") {
