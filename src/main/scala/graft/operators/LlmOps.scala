@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.sim.cosineSim
+import graft.plans.TopKPerKey
 
 /** SURVEY.md §2.J — LLM-data-pipeline operators (mandated by the task:
   * dedup, similarity search, text analysis, multimodal rows) over the
@@ -244,6 +245,18 @@ object LlmOps {
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), col("embedding").cast("array<double>").as("e"))
 
+  /** Per-key top-k under (ord DESC, tie ASC) through the bounded-heap
+    * `TopKPerKey` operator, plus each kept row's 1-based position as the
+    * int column `rank`. Only ≤ k rows per key per map task shuffle; the
+    * rank window then sorts ≤ k rows per key and needs no exchange of its
+    * own, since the final heap keeps the key's hash partitioning. Rows and
+    * ranks equal `row_number() OVER (PARTITION BY key ORDER BY ord DESC,
+    * tie ASC) <= k`, NaN ranking first; a NULL key, order or tie throws. */
+  private[graft] def topKRanked(df: DataFrame, key: String, ord: String, tie: String,
+                                k: Int, rank: String): DataFrame =
+    TopKPerKey.topK(df, key, ord, tie, k).withColumn(rank,
+      row_number().over(Window.partitionBy(key).orderBy(col(ord).desc, col(tie).asc)))
+
   /** Brute-force cosine top-10 around vec_id=0 — the kNN baseline. */
   def llmCosineKnn(spark: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(spark, dir)
@@ -261,18 +274,16 @@ object LlmOps {
   }
 
   /** Brute-force kNN JOIN: top-5 neighbors for each of the 5 query
-    * vectors (vec_id < 5) via broadcast + per-query window top-k. */
+    * vectors (vec_id < 5) via broadcast + per-query bounded-heap top-k. */
   def llmKnnJoin(spark: SparkSession, dir: String): DataFrame = {
     val emb = embDouble(spark, dir)
     val q = emb.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id").asc)
-    emb.select(col("vec_id").as("n_id"), col("e"))
+    val scored = emb.select(col("vec_id").as("n_id"), col("e"))
       .crossJoin(broadcast(q))
       .filter(col("n_id") =!= col("q_id"))
       .select(col("q_id"), col("n_id"), round(cosineSim(col("e"), col("qe")), 6).as("sim"))
       .filter(!isnan(col("sim"))) // same NaN-ranks-top exclusion as llmCosineKnn
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    topKRanked(scored, "q_id", "sim", "n_id", 5, "rnk")
       .select("q_id", "rnk", "n_id", "sim")
       .orderBy(col("q_id").asc, col("rnk").asc)
   }
@@ -487,7 +498,8 @@ object LlmOps {
     *
     * Shape: queries broadcast (bounded batch — the llm_knn_join
     * contract), one corpus pass scores queries×corpus via the codegen'd
-    * cosine kernel, per-query top-5 is a 20-partition window, votes and
+    * cosine kernel, per-query top-5 is the bounded-heap `TopKPerKey`
+    * (NaN similarities kept, ranked first as a sort would), votes and
     * the argmax are query-grain. At 100 TB the scoring pass swaps to the
     * IVF/LSH-bucketed candidate join (llm_ann_ivf) with this exact
     * eval frame on top. */
@@ -497,13 +509,11 @@ object LlmOps {
       .select(col("vec_id").as("qid"), col("e").as("qe"), col("label").as("qlabel"))
     val cand = emb.filter(col("vec_id") % 25 =!= 0)
       .select(col("vec_id"), col("e"), col("label"))
-    val wTop = Window.partitionBy("qid").orderBy(col("sim").desc, col("vec_id").asc)
     val wVote = Window.partitionBy("qid").orderBy(col("votes").desc, col("label").asc)
-    cand.crossJoin(broadcast(q))
+    val scored = cand.crossJoin(broadcast(q))
       .select(col("qid"), col("qlabel"), col("vec_id"), col("label"),
         round(cosineSim(col("e"), col("qe")), 6).as("sim"))
-      .withColumn("rn", row_number().over(wTop))
-      .filter(col("rn") <= 5)
+    TopKPerKey.topK(scored, "qid", "sim", "vec_id", 5)
       .groupBy("qid", "qlabel", "label")
       .agg(count(lit(1)).as("votes"))
       .withColumn("vr", row_number().over(wVote))

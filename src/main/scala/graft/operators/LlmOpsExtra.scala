@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.sim.cosineSim
-import LlmOps.{embDouble, toksRaw}
+import LlmOps.{embDouble, topKRanked, toksRaw}
 
 /** Extended training-data-pipeline operators beyond SURVEY §2.J's core
   * set: document fingerprinting, language-ID, quality scoring, SimHash
@@ -553,11 +553,10 @@ object LlmOpsExtra {
             p.getField("p_id").as("cell")))), 1, 8)).as("pc"))
       .select(col("q_id"), col("qe"), col("pc.cell").as("cell"))
     // search only the probed cells
-    val wTop = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id").asc)
-    probes.join(assign, "cell")
+    val scored = probes.join(assign, "cell")
       .filter(col("n_id") =!= col("q_id"))
       .withColumn("sim", round(cosineSim(col("qe"), col("ne")), 6))
-      .withColumn("rnk", row_number().over(wTop)).filter(col("rnk") <= 5)
+    topKRanked(scored, "q_id", "sim", "n_id", 5, "rnk")
       .select("q_id", "rnk", "n_id", "cell", "sim")
       .orderBy(col("q_id").asc, col("rnk").asc)
   }
@@ -726,12 +725,10 @@ object LlmOpsExtra {
     val q = ev.filter(col("vec_id") < 3)
       .select(col("vec_id").as("q_id"), col("e").as("qe"), col("bkt"))
     val n = ev.select(col("vec_id").as("n_id"), col("e").as("ne"), col("bkt"))
-    val w = Window.partitionBy("q_id").orderBy(col("sim").desc, col("n_id").asc)
-    q.join(n, "bkt")
+    val scored = q.join(n, "bkt")
       .filter(col("n_id") =!= col("q_id"))
       .withColumn("sim", round(cosineSim(col("qe"), col("ne")), 6))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+    topKRanked(scored, "q_id", "sim", "n_id", 5, "rnk")
       .select("q_id", "rnk", "n_id", "bkt", "sim")
       .orderBy(col("q_id").asc, col("rnk").asc)
   }
@@ -867,7 +864,7 @@ object LlmOpsExtra {
       .orderBy(col("doc_id").asc)
   }
 
-  /** BM25 lexical retrieval over an inverted index (round-8 addendum) —
+  /** BM25 lexical retrieval over an inverted index —
     * the sparse-retrieval counterpart of the dense ANN family
     * (llm_ann_lsh / llm_ann_ivf) and the lookup shape contamination
     * checks and dedup candidates actually run at corpus scale: an 8-doc
@@ -880,10 +877,11 @@ object LlmOpsExtra {
     * partials); document frequencies and the query-term table are
     * vocabulary-sized and BROADCAST; the per-(query, doc) score is a
     * partial-aggregated sum keyed by the pair, so the shuffle carries
-    * one row per scored pair; ranking is a per-query row_number over
-    * the scored candidates (bounded by the query batch). In production
-    * the df table adds a max-df stoplist cap so a universal term can't
-    * explode the candidate stream — noted, not needed at fixture vocab.
+    * one row per scored pair; ranking is the bounded-heap per-query
+    * top-k (`topKRanked`), so only ≤ 3 candidates per query per map task
+    * reach its shuffle. In production the df table adds a max-df
+    * stoplist cap so a universal term can't explode the candidate
+    * stream — noted, not needed at fixture vocab.
     *
     * BM25 constants k1 = 1.2, b = 0.75 as literals; idf is the
     * Robertson-Sparck-Jones ln(1 + (N − df + 0.5)/(df + 0.5)) — always
@@ -891,16 +889,11 @@ object LlmOpsExtra {
     * scores. Scores round at 6dp before ranking (sum of ≤ |vocab|
     * doubles; accumulation-order noise ≪ 0.5e-6) and ties break on the
     * lower candidate id, mirroring the oracle. */
-  def llmBm25Retrieve(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("score").desc, col("doc_id").asc)
-    bm25Scored(spark, dir)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
+  def llmBm25Retrieve(spark: SparkSession, dir: String): DataFrame =
+    topKRanked(bm25Scored(spark, dir), "q_id", "score", "doc_id", 3, "rnk")
       .select(col("q_id"), col("rnk").cast("long").as("rnk"),
         col("doc_id").as("hit_id"), col("score"))
       .orderBy(col("q_id").asc, col("rnk").asc)
-  }
 
   /** BM25-scored (q_id, doc_id, score) candidates for the shared 8-doc
     * query batch — the ONE scorer llm_bm25_retrieve, llm_hybrid_rrf,
@@ -943,46 +936,13 @@ object LlmOpsExtra {
       .groupBy("q_id", "doc_id").agg(round(sum("c"), 6).as("score"))
   }
 
-  /** Hybrid retrieval fusion (round 14, VERDICT r13 task 3) — reciprocal-
-    * rank fusion (Cormack/Clarke/Buettcher SIGIR'09: score(d) =
-    * Σ_lists 1/(k + rank_list(d)), k = 60) of the engine's two existing
-    * retrieval paths over the SAME 8-query batch and the same id space
-    * (vec_id ≡ doc_id by fixture construction): llm_bm25_retrieve's
-    * lexical ranking and llm_cosine_knn's dense ranking. This is the
-    * standard RAG-corpus hybrid shape — sparse catches exact-term
-    * matches dense misses, dense catches paraphrase lexical misses, and
-    * RRF needs no score calibration because it consumes only RANKS.
-    *
-    * Shape: the lexical leg re-runs the BM25 scorer off the MEMOIZED
-    * posting artifact (term equi-join, pair-grain partial agg — work ∝
-    * postings sharing a query term); the dense leg is one corpus pass
-    * against the 8 broadcast query vectors through the codegen'd cosine
-    * kernel. Each leg ranks per query (window over its own bounded
-    * candidate set), truncates to its top-10 list, and the fusion is a
-    * full-outer join of two ≤ 80-row frames — no new corpus-scale
-    * shuffle beyond the two ranking passes. At 100 TB the dense leg
-    * swaps to the IVF/LSH-bucketed candidate join (llm_ann_ivf) with
-    * this exact fusion frame on top.
-    *
-    * Determinism discipline: both legs round their scores at 6dp BEFORE
-    * ranking with doc-id ascending tie-breaks (the proven bm25/knn
-    * convention), ranks are exact integers, and the fused score is a
-    * sum of two rank-derived doubles rounded at 6dp — so the oracle
-    * reproduces every rank and therefore every fused value bit-for-bit.
-    * NaN cosines (zero-norm vectors) are excluded on both sides before
-    * ranking, the llm_cosine_knn convention. */
   /** The BM25 leg's top-10 ranking for the shared 8-query batch —
     * (q_id, doc_id, lex_rnk ≤ 10). Factored for llm_hybrid_rrf and
     * llm_retrieval_eval; see llmHybridRrf for the determinism
     * discipline (6dp-rounded scores, doc-id tie-breaks). */
-  private def lexRanks(spark: SparkSession, dir: String): DataFrame = {
-    val wLex = Window.partitionBy("q_id")
-      .orderBy(col("score").desc, col("doc_id").asc)
-    bm25Scored(spark, dir)
-      .withColumn("lex_rnk", row_number().over(wLex))
-      .filter(col("lex_rnk") <= 10)
+  private def lexRanks(spark: SparkSession, dir: String): DataFrame =
+    topKRanked(bm25Scored(spark, dir), "q_id", "score", "doc_id", 10, "lex_rnk")
       .select(col("q_id"), col("doc_id"), col("lex_rnk").cast("long").as("lex_rnk"))
-  }
 
   /** The dense leg's top-10 cosine ranking for the same batch —
     * (q_id, doc_id, den_rnk ≤ 10); NaN sims excluded before ranking. */
@@ -990,15 +950,12 @@ object LlmOpsExtra {
     val emb = embDouble(spark, dir)
     val qv = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val wDen = Window.partitionBy("q_id")
-      .orderBy(col("sim").desc, col("doc_id").asc)
-    emb.crossJoin(broadcast(qv))
+    val scored = emb.crossJoin(broadcast(qv))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("doc_id"),
         round(cosineSim(col("e"), col("qe")), 6).as("sim"))
       .filter(!isnan(col("sim")))
-      .withColumn("den_rnk", row_number().over(wDen))
-      .filter(col("den_rnk") <= 10)
+    topKRanked(scored, "q_id", "sim", "doc_id", 10, "den_rnk")
       .select(col("q_id"), col("doc_id"), col("den_rnk").cast("long").as("den_rnk"))
   }
 
@@ -1014,6 +971,34 @@ object LlmOpsExtra {
       .withColumn("rnk", row_number().over(wFuse).cast("long"))
   }
 
+  /** Hybrid retrieval fusion — reciprocal-rank fusion
+    * (Cormack/Clarke/Buettcher SIGIR'09: score(d) =
+    * Σ_lists 1/(k + rank_list(d)), k = 60) of the engine's two existing
+    * retrieval paths over the SAME 8-query batch and the same id space
+    * (vec_id ≡ doc_id by fixture construction): llm_bm25_retrieve's
+    * lexical ranking and llm_cosine_knn's dense ranking. This is the
+    * standard RAG-corpus hybrid shape — sparse catches exact-term
+    * matches dense misses, dense catches paraphrase lexical misses, and
+    * RRF needs no score calibration because it consumes only RANKS.
+    *
+    * Shape: the lexical leg re-runs the BM25 scorer off the MEMOIZED
+    * posting artifact (term equi-join, pair-grain partial agg — work ∝
+    * postings sharing a query term); the dense leg is one corpus pass
+    * against the 8 broadcast query vectors through the codegen'd cosine
+    * kernel. Each leg keeps its per-query top-10 through the bounded-heap
+    * `topKRanked` (≤ 10 rows per query per map task shuffle), and the
+    * fusion is a full-outer join of two ≤ 80-row frames — no new
+    * corpus-scale shuffle beyond the two ranking passes. At 100 TB the
+    * dense leg swaps to the IVF/LSH-bucketed candidate join (llm_ann_ivf)
+    * with this exact fusion frame on top.
+    *
+    * Determinism discipline: both legs round their scores at 6dp BEFORE
+    * ranking with doc-id ascending tie-breaks (the proven bm25/knn
+    * convention), ranks are exact integers, and the fused score is a
+    * sum of two rank-derived doubles rounded at 6dp — so the oracle
+    * reproduces every rank and therefore every fused value bit-for-bit.
+    * NaN cosines (zero-norm vectors) are excluded on both sides before
+    * ranking, the llm_cosine_knn convention. */
   def llmHybridRrf(spark: SparkSession, dir: String): DataFrame =
     rrfFused(lexRanks(spark, dir), denRanks(spark, dir))
       .filter(col("rnk") <= 3)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graftshim.PlanBridge
 
@@ -15,11 +16,11 @@ import org.apache.spark.sql.graftshim.PlanBridge
   * (top-k of a union = top-k of the per-part top-ks), so each map task
   * first reduces its partition to ≤ k rows per LOCAL key with bounded
   * heaps, and only those survivors shuffle. The window-function
-  * formulation (`row_number() OVER (...) <= k`, win_topk) must shuffle
-  * EVERY row and fully sort each partition; this operator shuffles
-  * ≤ k·(distinct keys per map task) rows and never sorts more than k
-  * per key — at 100 TB, the difference between moving the fact table
-  * and moving the report.
+  * formulation (`row_number() OVER (...) <= k`, win_topk) shuffles as
+  * few rows once Spark's WindowGroupLimit plants its partial limit, but
+  * that limit reads a full sort of each map partition; this operator
+  * never sorts, and holds k rows per key where the sort buffers the
+  * whole partition.
   *
   * Contract (concrete long/double-backed types, like the other native
   * execs): key integral (long-backed), order DOUBLE descending, tie
@@ -52,16 +53,32 @@ object TopKPerKeyStrategy extends SparkStrategy {
 
 /** Shared bounded-heap reduction: per key keep the k best rows under
   * (ord DESC, tie ASC). The heap dequeues the WORST kept row first, so a
-  * better candidate replaces it in O(log k). */
+  * better candidate replaces it in O(log k). Order values compare with
+  * Spark's own sort comparator (`SQLOrderingUtil.compareDoubles`: NaN
+  * above every number, -0.0 equal to 0.0), so the heap keeps exactly the
+  * rows a `row_number() OVER (... ORDER BY ord DESC, tie ASC) <= k`
+  * window keeps. */
 private[plans] object TopKHeaps {
   type Entry = (Double, Long, InternalRow)
   // PriorityQueue dequeues its ordering's MAX; rank the worst row highest:
   // smaller ord is worse; on equal ord, larger tie is worse.
   private val worstFirst: Ordering[Entry] = new Ordering[Entry] {
     override def compare(a: Entry, b: Entry): Int = {
-      val c = java.lang.Double.compare(b._1, a._1)
+      val c = SQLOrderingUtil.compareDoubles(b._1, a._1)
       if (c != 0) c else java.lang.Long.compare(a._2, b._2)
     }
+  }
+
+  /** Both phases' body: each partition reduced in place. */
+  def execute(child: SparkPlan, key: Attribute, ord: Attribute, tie: Attribute,
+              k: Int): RDD[InternalRow] = {
+    def slot(a: Attribute, what: String): Int = {
+      val i = child.output.indexWhere(_.exprId == a.exprId)
+      require(i >= 0, s"top-k $what attribute must come from the child plan")
+      i
+    }
+    val (ki, oi, ti) = (slot(key, "key"), slot(ord, "order"), slot(tie, "tie"))
+    child.execute().mapPartitions(reduce(_, ki, oi, ti, k), preservesPartitioning = true)
   }
 
   /** Reduce an iterator to ≤ k rows per key; emit survivors best-first
@@ -92,13 +109,10 @@ private[plans] object TopKHeaps {
       if (h.size < k) {
         h.enqueue((ord, tie, r.copy()))
       } else {
-        // primitive compare BEFORE any allocation (round 13: the old code
-        // built a boxed (Double, Long, null) tuple per input row just to
-        // ask the heap; on the map-side phase that is one allocation per
-        // fact row, nearly all rejected). Same ordering as worstFirst,
-        // including its Double.compare NaN totality.
+        // primitive compare before any allocation: on the map-side phase
+        // nearly every row is rejected here. Same ordering as worstFirst.
         val head = h.head
-        val c = java.lang.Double.compare(head._1, ord)
+        val c = SQLOrderingUtil.compareDoubles(head._1, ord)
         if (c < 0 || (c == 0 && tie < head._2)) { // candidate beats the worst
           h.dequeue()
           h.enqueue((ord, tie, r.copy()))
@@ -124,12 +138,19 @@ private[plans] object TopKHeaps {
       }
     }
   }
+}
 
-  def idx(output: Seq[Attribute], a: Attribute, what: String): Int = {
-    val i = output.indexWhere(_.exprId == a.exprId)
-    require(i >= 0, s"top-k $what attribute must come from the child plan")
-    i
-  }
+/** The two phases share output, partitioning and body; they differ only
+  * in what they ask of their child's distribution. */
+sealed trait TopKPhaseExec extends UnaryExecNode {
+  def key: Attribute
+  def ord: Attribute
+  def tie: Attribute
+  def k: Int
+  override def output: Seq[Attribute] = child.output
+  override def outputPartitioning: Partitioning = child.outputPartitioning
+  protected override def doExecute(): RDD[InternalRow] =
+    TopKHeaps.execute(child, key, ord, tie, k)
 }
 
 /** Map-side phase: no distribution requirement — reduces each input
@@ -137,15 +158,7 @@ private[plans] object TopKHeaps {
   * exchange the final phase asks for. */
 case class PartialTopKExec(
     child: SparkPlan, key: Attribute, ord: Attribute, tie: Attribute, k: Int)
-  extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output
-  override def outputPartitioning: Partitioning = child.outputPartitioning
-  protected override def doExecute(): RDD[InternalRow] = {
-    val (ki, oi, ti) = (TopKHeaps.idx(output, key, "key"),
-      TopKHeaps.idx(output, ord, "order"), TopKHeaps.idx(output, tie, "tie"))
-    val n = k
-    child.execute().mapPartitions(TopKHeaps.reduce(_, ki, oi, ti, n), preservesPartitioning = true)
-  }
+  extends TopKPhaseExec {
   override protected def withNewChildInternal(newChild: SparkPlan): PartialTopKExec =
     copy(child = newChild)
 }
@@ -155,17 +168,9 @@ case class PartialTopKExec(
   * per-task candidates, emits each key's rows best-first. */
 case class FinalTopKExec(
     child: SparkPlan, key: Attribute, ord: Attribute, tie: Attribute, k: Int)
-  extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output
+  extends TopKPhaseExec {
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(Seq(key)) :: Nil
-  override def outputPartitioning: Partitioning = child.outputPartitioning
-  protected override def doExecute(): RDD[InternalRow] = {
-    val (ki, oi, ti) = (TopKHeaps.idx(output, key, "key"),
-      TopKHeaps.idx(output, ord, "order"), TopKHeaps.idx(output, tie, "tie"))
-    val n = k
-    child.execute().mapPartitions(TopKHeaps.reduce(_, ki, oi, ti, n), preservesPartitioning = true)
-  }
   override protected def withNewChildInternal(newChild: SparkPlan): FinalTopKExec =
     copy(child = newChild)
 }
@@ -175,13 +180,11 @@ object TopKPerKey {
   def topK(df: DataFrame, key: String, ord: String, tie: String, k: Int): DataFrame = {
     val lp = PlanBridge.logicalPlan(df)
     def attr(name: String): Attribute = EntryChecks.attr(lp, name)
-    // TopKHeaps.reduce reads raw getLong/getDouble slots — the long/double
-    // contract lived only in the doc comment, so an IntegerType key or a
-    // non-double order column silently yielded garbage rows instead of an
-    // error (ADVICE r5). Enforce types here, fail fast with the exact
-    // mismatch. Nullability can't be a static check (parquet schemas are
-    // nullable even for null-free data): actual NULLs are rejected at
-    // runtime inside TopKHeaps.reduce.
+    // TopKHeaps.reduce reads raw getLong/getDouble slots, so any other
+    // type would yield garbage rows: fail fast with the exact mismatch.
+    // Nullability can't be a static check (parquet schemas are nullable
+    // even for null-free data): actual NULLs are rejected at runtime
+    // inside TopKHeaps.reduce.
     def require2(a: Attribute, role: String, dt: org.apache.spark.sql.types.DataType): Unit = {
       if (a.dataType != dt) throw new IllegalArgumentException(
         s"topK $role column '${a.name}' must be $dt (raw-slot heap reduce), got ${a.dataType}; " +

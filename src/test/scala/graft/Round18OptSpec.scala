@@ -25,16 +25,18 @@ class Round18OptSpec extends AnyFunSuite {
     // table; the test session runs at 4 shuffle partitions over a tiny
     // fixture, so the byte-derivation must FLOOR to 4 (pre-r18: always 32)
     SparkEntry.queries("graph_pagerank")(spark, sf0001).collect()
+    // only this session's table: other suites' sessions (another shuffle
+    // conf) stage theirs in the same catalog, named with their own identity
+    val own = "_" + Integer.toHexString(System.identityHashCode(spark))
     val tbl = spark.sessionState.catalog.listTables("default")
-      .map(_.table).filter(_.startsWith("graft_arcs_b_"))
+      .map(_.table).filter(t => t.startsWith("graft_arcs_b_") && t.endsWith(own))
     assert(tbl.nonEmpty, "bucketed arc table not found in the catalog")
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val specs = tbl.map(t => spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
       .bucketSpec)
     assert(specs.forall(_.isDefined), "arc table lost its bucket spec")
-    // every arc table staged by this suite's sessions shares the 4-part
-    // test conf; a tiny fixture can never out-derive the floor
+    // a tiny fixture can never out-derive the floor
     assert(specs.flatten.map(_.numBuckets).distinct == Seq(sessionParts),
       s"expected bucket count == session parallelism ($sessionParts), " +
         s"got ${specs.flatten.map(_.numBuckets).distinct}")

@@ -2,19 +2,23 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.expressions.Window
 import graft.plans.{FinalTopKExec, PartialTopKExec, TopKPerKey}
 
 /** Contract of the native per-key top-k operator: (1) results identical
   * to the window row_number formulation, under any input partitioning;
   * (2) the plan really has the map-side partial phase BELOW the exchange
-  * (the whole point — only per-task survivors shuffle); (3) ties on the
-  * order value break by the tie key, deterministically. */
+  * (the whole point — only per-task survivors shuffle), in every declared
+  * retrieval query too; (3) ties on the order value break by the tie key,
+  * deterministically, and order values rank as Spark's DESC sort ranks
+  * them (NaN first). */
 class TopKPerKeySpec extends AnyFunSuite {
   import TestSpark._
 
   private def windowed(k: Int) = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
     Tables.orders(spark, sf0001)
@@ -36,6 +40,23 @@ class TopKPerKeySpec extends AnyFunSuite {
     }
   }
 
+  /** Checks that every FinalTopKExec in `plan` reads a hash exchange (or
+    * a reuse of one) fed directly by its PartialTopKExec; returns how many
+    * finals the plan holds. */
+  private def twoPhase(what: String, plan: SparkPlan): Int = {
+    val finals = plan.collect { case f: FinalTopKExec => f }
+    finals.foreach { f =>
+      val exchange = f.child match {
+        case e: ShuffleExchangeExec => e
+        case ReusedExchangeExec(_, e: ShuffleExchangeExec) => e
+        case _ => fail(s"$what: no exchange between partial and final in:\n$plan")
+      }
+      assert(exchange.child.isInstanceOf[PartialTopKExec],
+        s"$what: PartialTopKExec not found below the shuffle in:\n$plan")
+    }
+    finals.size
+  }
+
   test("partial phase sits below the shuffle, final above it") {
     // static plan (AQE off) — the adaptive form wraps each stage in
     // QueryStage leaves that hide the operators from collect()
@@ -44,14 +65,17 @@ class TopKPerKeySpec extends AnyFunSuite {
     val df = TopKPerKey.topK(
       Tables.orders(session, sf0001).select("o_custkey", "o_orderkey", "o_totalprice"),
       "o_custkey", "o_totalprice", "o_orderkey", 3)
-    val plan = df.queryExecution.executedPlan
-    val finals = plan.collect { case f: FinalTopKExec => f }
-    assert(finals.size == 1, s"expected one FinalTopKExec in:\n$plan")
-    val exchanges = finals.head.collect { case e: ShuffleExchangeExec => e }
-    assert(exchanges.size == 1, s"no exchange between partial and final in:\n$plan")
-    val partialBelowShuffle = exchanges.head.collect { case p: PartialTopKExec => p }
-    assert(partialBelowShuffle.size == 1,
-      s"PartialTopKExec not found below the shuffle in:\n$plan")
+    assert(twoPhase("orders top-3", df.queryExecution.executedPlan) == 1)
+    // every per-query retrieval ranking runs through the operator: one
+    // final per ranking leg (hybrid fuses two legs; the eval reads each
+    // leg twice, its second read a reused exchange)
+    val legs = Seq("llm_knn_join" -> 1, "llm_knn_classify" -> 1, "llm_ann_ivf" -> 1,
+      "llm_ann_lsh" -> 1, "llm_bm25_retrieve" -> 1, "llm_hybrid_rrf" -> 2,
+      "llm_retrieval_eval" -> 4)
+    for ((q, n) <- legs) {
+      val plan = SparkEntry.queries(q)(session, sf0001).queryExecution.executedPlan
+      assert(twoPhase(q, plan) == n, s"$q: expected $n FinalTopKExec in:\n$plan")
+    }
   }
 
   test("ties on the order value break by the tie key ascending") {
@@ -60,9 +84,25 @@ class TopKPerKeySpec extends AnyFunSuite {
       (1L, 10L, 5.0), (1L, 7L, 5.0), (1L, 9L, 5.0), (1L, 8L, 1.0),
       (2L, 3L, 2.0), (2L, 4L, 2.0)
     ).toDF("k", "id", "v")
-    val got = TopKPerKey.topK(df, "k", "v", "id", 2)
+    def top2(in: DataFrame) = TopKPerKey.topK(in, "k", "v", "id", 2)
       .orderBy(col("k").asc, col("v").desc, col("id").asc)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.toSeq == Seq((1L, 7L), (1L, 9L), (2L, 3L), (2L, 4L)))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(top2(df) == Seq((1L, 7L), (1L, 9L), (2L, 3L), (2L, 4L)))
+    // NaN ranks above every number, as in Spark's DESC sort (kNN
+    // classification keeps NaN similarities), and -0.0 ties 0.0
+    val nan = Seq(
+      (3L, 1L, 0.9), (3L, 2L, Double.NaN), (3L, 3L, Double.NaN), (3L, 4L, 1.0),
+      (4L, 5L, -0.0), (4L, 6L, 0.0), (4L, 7L, 0.0), (4L, 8L, Double.NaN)
+    ).toDF("k", "id", "v")
+    assert(top2(nan).toSet == Set((3L, 2L), (3L, 3L), (4L, 8L), (4L, 5L)))
+    // the ranked helper keeps the window's rows and gives its ranks
+    val w = Window.partitionBy("k").orderBy(col("v").desc, col("id").asc)
+    def ranks(ranked: DataFrame) =
+      ranked.select("k", "id", "rnk").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    for (in <- Seq(df, nan)) {
+      assert(ranks(operators.LlmOps.topKRanked(in, "k", "v", "id", 2, "rnk")) ==
+        ranks(in.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 2)))
+    }
   }
 }
